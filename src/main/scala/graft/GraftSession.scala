@@ -12,6 +12,10 @@ import org.apache.spark.sql.SparkSession
   *    functions (`graft_dot`, `graft_shingles`, `graft_minhash`,
   *    `graft_simhash`) resolve in plain SQL.
   *  - UTC session timezone (calendar ops must not depend on driver locale).
+  *  - A whole-stage codegen cache of 150 classes
+  *    (`spark.sql.codegen.cache.maxEntries`), so an interactive session's
+  *    warm plans stop recompiling.
+  *  - RocksDB streaming state with changelog checkpointing.
   *
   * Sizing guidance (cluster-tunable, not hardcoded):
   *  - `spark.sql.shuffle.partitions`: ~2-3× total executor cores, and at
@@ -24,17 +28,25 @@ import org.apache.spark.sql.SparkSession
   */
 object GraftSession {
 
-  /** Apply graft's scale defaults to a builder (pre-session). */
-  def tune(b: SparkSession.Builder): SparkSession.Builder = b
-    .config("spark.sql.adaptive.enabled", "true")
-    .config("spark.sql.adaptive.skewJoin.enabled", "true")
-    .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
+  /** graft's scale defaults, in the order [[tune]] applies them. */
+  val defaults: Seq[(String, String)] = Seq(
+    "spark.sql.adaptive.enabled" -> "true",
+    "spark.sql.adaptive.skewJoin.enabled" -> "true",
+    "spark.sql.adaptive.coalescePartitions.enabled" -> "true",
     // Apply AQE to plans feeding persisted frames too — iterative operators
     // (connected components) cache small intermediates whose shuffles should
     // coalesce instead of running at the static partition count each round.
-    .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.extensions", "graft.GraftExtensions")
+    "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning" -> "true",
+    "spark.sql.session.timeZone" -> "UTC",
+    "spark.sql.extensions" -> "graft.GraftExtensions",
+    // Whole-stage codegen keeps compiled classes in one JVM-wide cache of
+    // 100 entries by default, split across Guava segments that each evict
+    // on their own. The app.py read mix (charts, ETL reads, an analytics
+    // panel, index lookups: 8 keys) overflows it and recompiles ~3 evicted
+    // classes per query on every pass; measured at sf0.1, 125 entries
+    // already stop that, 150 leaves a segment's worth of margin. Static:
+    // read once, when the first plan is compiled in the JVM.
+    "spark.sql.codegen.cache.maxEntries" -> "150",
     // Streaming state lives OFF-HEAP in RocksDB: the stateful operators
     // here key state by entity/user (EventCharts.streaks,
     // mapGroupsWithState), whose cardinality at 100 TB is unbounded — the
@@ -42,10 +54,13 @@ object GraftSession {
     // the data does. Changelog checkpointing uploads per-batch deltas
     // instead of full SST snapshots, keeping commit latency flat as state
     // grows.
-    .config("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    .config("spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled",
-      "true")
+    "spark.sql.streaming.stateStore.providerClass" ->
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
+    "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" -> "true")
+
+  /** Apply graft's scale defaults to a builder (pre-session). */
+  def tune(b: SparkSession.Builder): SparkSession.Builder =
+    defaults.foldLeft(b) { case (acc, (k, v)) => acc.config(k, v) }
 
   def builder(appName: String = "graft"): SparkSession.Builder =
     tune(SparkSession.builder().appName(appName))

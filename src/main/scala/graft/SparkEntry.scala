@@ -276,6 +276,7 @@ object SparkEntry
       Dedup.dupSpans(Tables.documents(s, d), "doc_id", "text", k = 8)))
 
   def releaseCaches(): Unit = {
+    Tables.clearSchemas()
     spanCache.clear()
     bloomStoreCache.clear()
     zoneStoreCache.clear()

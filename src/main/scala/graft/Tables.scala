@@ -1,15 +1,63 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Parquet table loaders for the graft test schema.
   *
-  * Loads are plain `spark.read.parquet` so Catalyst owns column pruning and
-  * predicate pushdown: every operator downstream selects only the columns it
-  * needs *before* wide transforms, which at 100 TB turns these into narrow
-  * columnar scans with PushedFilters instead of full-table reads.
+  * Loads are lazy parquet scans through [[parquet]], so Catalyst owns column
+  * pruning and predicate pushdown: every operator downstream selects only
+  * the columns it needs *before* wide transforms, which at 100 TB turns
+  * these into narrow columnar scans with PushedFilters instead of
+  * full-table reads. [[parquet]] reuses each file version's inferred schema,
+  * so building a plan over a known table launches no job.
   */
 object Tables {
+  /** Inferred schemas by (qualified path, modification time, length,
+    * inference confs). Cleared by `SparkEntry.releaseCaches()`. */
+  private val schemas =
+    scala.collection.concurrent.TrieMap.empty[(String, Long, Long, Seq[String]), StructType]
+
+  /** Session confs that change the schema parquet inference yields:
+    * `Tables.events` sets `nanosAsLong`, which turns TIMESTAMP(NANOS) `ts`
+    * into a LongType column. */
+  private val inferenceConfs = Seq(
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.mergeSchema")
+
+  /** `spark.read.parquet(path)` without its per-read schema inference.
+    * Inference lists the path, reads a footer and runs a one-task
+    * schema-merge job; an interactive session reading the same tables op
+    * after op paid that job on every read. The inferred schema is kept per
+    * file version (the path's status: a rewrite replaces the file or
+    * directory and moves its modification time) and handed back as a
+    * user schema. Every call still builds a FRESH relation, so two reads
+    * in one query carry distinct attribute ids and self-join cleanly.
+    *
+    * A change nested below a directory that leaves the directory's own
+    * status alone (a file swapped inside a partition subdirectory) is not
+    * seen until [[clearSchemas]]. Paths that do not resolve to one status
+    * (missing paths, globs) take the plain read and its errors. */
+  def parquet(spark: SparkSession, path: String): DataFrame = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    val status =
+      try Some(p.getFileSystem(spark.sparkContext.hadoopConfiguration).getFileStatus(p))
+      catch { case _: java.io.FileNotFoundException | _: IllegalArgumentException => None }
+    status match {
+      case None => spark.read.parquet(path)
+      case Some(st) =>
+        val key = (st.getPath.toString, st.getModificationTime, st.getLen,
+          inferenceConfs.map(k => spark.conf.getOption(k).getOrElse("")))
+        val schema = schemas.getOrElseUpdate(key, spark.read.parquet(path).schema)
+        spark.read.schema(schema).parquet(path)
+    }
+  }
+
+  private[graft] def clearSchemas(): Unit = schemas.clear()
+
   /** OPT-IN guard against single-task map stages on low-split inputs
     * (spark_optimization_guide §2.5, "input skew: one huge unsplittable
     * file"): a parquet file is only splittable at row-group boundaries, so
@@ -63,7 +111,7 @@ object Tables {
   }
 
   def load(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+    parquet(spark, s"$dir/$name.parquet")
 
   def region(s: SparkSession, d: String): DataFrame    = load(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame    = load(s, d, "nation")

@@ -294,8 +294,8 @@ object Similarity {
   }
 
   def loadIndex(spark: org.apache.spark.sql.SparkSession, path: String): IvfIndex = {
-    val assigned = spark.read.parquet(s"$path/cells")
-    val centers = spark.read.parquet(s"$path/centers").collect()
+    val assigned = graft.Tables.parquet(spark, s"$path/cells")
+    val centers = graft.Tables.parquet(spark, s"$path/centers").collect()
       .map(r => (r.getInt(0), r.getSeq[Double](1).toArray))
       .sortBy(_._1)
     IvfIndex(assigned, centers)
@@ -639,8 +639,8 @@ object Similarity {
 
   def loadPqIndex(spark: org.apache.spark.sql.SparkSession,
                   path: String): PqIndex = {
-    val codes = spark.read.parquet(s"$path/codes")
-    val rows = spark.read.parquet(s"$path/codebooks").collect()
+    val codes = graft.Tables.parquet(spark, s"$path/codes")
+    val rows = graft.Tables.parquet(spark, s"$path/codebooks").collect()
       .map(r => (r.getInt(0), r.getInt(1), r.getSeq[Double](2).toArray))
     val codebooks = rows.groupBy(_._1).toSeq.sortBy(_._1)
       .map(_._2.sortBy(_._2).map(_._3)).toArray
@@ -956,11 +956,11 @@ object Similarity {
 
   def loadIvfPqIndex(spark: org.apache.spark.sql.SparkSession,
                      path: String): IvfPqIndex = {
-    val codes = spark.read.parquet(s"$path/codes")
-    val centers = spark.read.parquet(s"$path/centers").collect()
+    val codes = graft.Tables.parquet(spark, s"$path/codes")
+    val centers = graft.Tables.parquet(spark, s"$path/centers").collect()
       .map(r => (r.getInt(0), r.getSeq[Double](1).toArray))
       .sortBy(_._1)
-    val rows = spark.read.parquet(s"$path/codebooks").collect()
+    val rows = graft.Tables.parquet(spark, s"$path/codebooks").collect()
       .map(r => (r.getInt(0), r.getInt(1), r.getSeq[Double](2).toArray))
     val codebooks = rows.groupBy(_._1).toSeq.sortBy(_._1)
       .map(_._2.sortBy(_._2).map(_._3)).toArray

@@ -87,10 +87,11 @@ object BloomIndex {
     // Probe hash computed through the SAME public xxhash64 function the
     // build pass used — if a Spark upgrade ever changes that function's
     // seed or implementation, build and probe move together instead of
-    // silently diverging into false negatives. (One local-relation row;
-    // no job is launched for a literal projection.)
-    val h = spark.range(1).select(xxhash64(lit(value))).head.getLong(0)
-    spark.read.parquet(sidecarPath)
+    // silently diverging into false negatives. Over a one-row local
+    // relation the optimizer folds the projection on the driver, so no
+    // job is launched (`spark.range(1)` would schedule one).
+    val h = Seq(value).toDF("v").select(xxhash64(col("v"))).head.getLong(0)
+    graft.Tables.parquet(spark, sidecarPath)
       .as[(String, Array[Byte])]
       .filter { case (_, bytes) =>
         BloomFilter.readFrom(new java.io.ByteArrayInputStream(bytes))
@@ -115,7 +116,7 @@ object BloomIndex {
              maxCandidates: Int = 100000): DataFrame = {
     val files = candidateQuery(spark, sidecarPath, value)
       .limit(maxCandidates + 1).collect().toSeq
-    val store = spark.read.parquet(storePath)
+    val store = graft.Tables.parquet(spark, storePath)
     if (files.isEmpty) store.limit(0)
     else if (files.size > maxCandidates)
       store.filter(col(keyCol).cast("string") === value)

@@ -59,7 +59,7 @@ object TermIndex {
       term)
     val files = BloomIndex.candidateQuery(spark, sidecarPath, term)
       .limit(maxCandidates + 1).collect().toSeq
-    val store = spark.read.parquet(storePath)
+    val store = graft.Tables.parquet(spark, storePath)
     if (files.isEmpty) store.limit(0)
     else if (files.size > maxCandidates) store.filter(pred)
     else spark.read.schema(store.schema).parquet(files: _*).filter(pred)

@@ -50,7 +50,7 @@ object ZoneMapIndex {
 
   private def candidateQuery(spark: SparkSession, sidecarPath: String,
                              column: String, lo: Column, hi: Column): DataFrame =
-    spark.read.parquet(sidecarPath)
+    graft.Tables.parquet(spark, sidecarPath)
       // NULL stats make the conjunction NULL → filtered out, which is
       // the correct skip (see class doc).
       .filter(col(s"max_$column") >= lo && col(s"min_$column") <= hi)
@@ -73,7 +73,7 @@ object ZoneMapIndex {
     import spark.implicits._
     val files = candidateQuery(spark, sidecarPath, column, lo, hi)
       .limit(maxCandidates + 1).as[String].collect().toSeq
-    val store = spark.read.parquet(storePath)
+    val store = graft.Tables.parquet(spark, storePath)
     if (files.isEmpty) store.limit(0)
     else if (files.size > maxCandidates)
       store.filter(col(column) >= lo && col(column) <= hi)

@@ -27,4 +27,18 @@ class GraftSessionSpec extends SparkSpec {
       "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled")
       === "true")
   }
+
+  test("defaults pin the codegen cache size and apply through local()") {
+    val defaults = GraftSession.defaults
+    assert(defaults.map(_._1).distinct.size === defaults.size)
+    // Static: fixed when the JVM first compiles a plan, so the shared test
+    // session cannot read it back — the settings list is the contract.
+    assert(defaults.toMap.get("spark.sql.codegen.cache.maxEntries") === Some("150"))
+    assert(org.apache.spark.sql.internal.SQLConf
+      .isStaticConfigKey("spark.sql.codegen.cache.maxEntries"))
+    val s = GraftSession.local(2)
+    for ((k, v) <- defaults
+         if !org.apache.spark.sql.internal.SQLConf.isStaticConfigKey(k))
+      assert(s.conf.get(k) === v, k)
+  }
 }

@@ -57,4 +57,16 @@ class BloomIndexSpec extends SparkSpec {
       .select("part").as[Long].collect().sorted.toSeq
     assert(got === (1L to 8L))
   }
+
+  test("probing a known sidecar plans without launching a job") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_bloomidx4").toString
+    val store = s"$dir/store"; val side = s"$dir/side"
+    (1L to 200L).map(i => (i, i)).toDF("k", "v")
+      .repartition(4, col("k")).write.parquet(store)
+    BloomIndex.build(spark, store, side, "k", expectedPerFile = 100L)
+    BloomIndex.candidateFiles(spark, side, "7") // infers the sidecar schema
+    var probe: org.apache.spark.sql.Dataset[String] = null
+    assert(jobsLaunched { probe = BloomIndex.candidateQuery(spark, side, "7") } === 0)
+    assert(probe.collect().length >= 1)
+  }
 }
