@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.scheduler._
-import org.apache.spark.sql.SparkSession
 import scala.collection.mutable
 
 /** Dev-only measurement harness (guide §1): run named queries with a
@@ -21,13 +20,7 @@ object ProfileQ {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val reps = args.lastOption.flatMap(_.toIntOption).getOrElse(1)
     val names = args.filterNot(_.forall(_.isDigit))
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.local(cpus.toInt)
     spark.sparkContext.setLogLevel("WARN")
     try spark.read.parquet(s"$sfDir/lineitem.parquet").count()
     catch { case _: Throwable => () }
@@ -57,8 +50,8 @@ object ProfileQ {
         fn(spark, sfDir).count()
         val dt = (System.nanoTime() - t0) / 1e9
         Thread.sleep(400) // let the listener bus drain
+        println(f"===== $name rep$r: $dt%.3f s, $jobs jobs, ${stages.size} stages =====")
         if (r == reps) {
-          println(f"===== $name rep$r: $dt%.3f s, $jobs jobs, ${stages.size} stages =====")
           val rows = stages.values.toSeq.sortBy(-_.ms).take(20)
           for (s <- rows)
             println(f"  stage ${s.id}%4d ${s.ms}%6d ms ${s.tasks}%3d tasks " +
@@ -68,8 +61,10 @@ object ProfileQ {
         }
         dt
       }
+      val sorted = times.sorted
+      val median = (sorted((sorted.size - 1) / 2) + sorted(sorted.size / 2)) / 2
       println(f"===== $name times: ${times.map(t => f"$t%.2f").mkString(", ")} " +
-        f"median=${times.sorted.apply(times.size / 2)}%.3f =====")
+        f"median=$median%.3f =====")
     }
     SparkEntry.releaseCaches()
     spark.stop()

@@ -284,7 +284,7 @@ private[graft] trait QueryRegistry4 { this: SparkEntry.type =>
           struct(col("sk").as("src"), col("pk").as("dst")),
           struct(col("pk").as("src"), col("sk").as("dst")))).as("e"))
         .select(col("e.src").as("src"), col("e.dst").as("dst"))
-      Graph.personalizedPagerank(edges, "src", "dst",
+      Graph.pagerankPortable(edges, "src", "dst",
         seeds = Seq(1L, 2L, 3L), iters = 3, topK = 20)
     }),
 

@@ -284,6 +284,7 @@ object SparkEntry
     clustersCache.clear()
     fpStoreCache.clear()
     lshStoreCache.clear()
+    semStoreCache.clear()
     bpeMergeCache.clear()
     pairStatsCache.clear()
     portablePairsCache.clear()

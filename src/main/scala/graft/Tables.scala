@@ -98,15 +98,23 @@ object Tables {
     * callers own key-skew judgement (a graph's src key is node-bounded). */
   private[graft] def spreadBy(df: DataFrame,
                               keys: Seq[org.apache.spark.sql.Column]): DataFrame = {
-    if (sys.props.get("graft.scan.spread").contains("off")) return df
     val cores = df.sparkSession.sparkContext.defaultParallelism
     // Partition-count probe WITHOUT df.rdd: under AQE, .rdd finalizes the
     // adaptive plan, which EXECUTES every upstream shuffle stage eagerly
     // and throws that work away when the frame is re-planned downstream.
-    // sparkPlan.execute() builds the non-adaptive physical RDD lazily —
-    // partition arithmetic only, no job (current call sites are exchange-
-    // free scan/project plans, where this is pure planning either way).
-    if (df.queryExecution.sparkPlan.execute().getNumPartitions >= cores) df
+    // On a join-free plan, sparkPlan.execute() builds the non-adaptive
+    // physical RDD lazily — partition arithmetic only, no job — although
+    // the plan is unprepared (no exchanges inserted). A join cannot run
+    // unprepared: a broadcast join asks its build side for a broadcast
+    // that only the missing exchange gives ("HashAggregate does not
+    // implement doExecuteBroadcast"). A joined frame is therefore kept as
+    // it is, unprobed: a shuffled join already runs at the shuffle
+    // partition count, and a broadcast join keeps its stream side's
+    // partitioning until the next keyed exchange.
+    val plan = df.queryExecution.sparkPlan
+    val joined = plan.exists(p => p.children.length > 1 &&
+      !p.isInstanceOf[org.apache.spark.sql.execution.UnionExec])
+    if (joined || plan.execute().getNumPartitions >= cores) df
     else df.repartition(cores, keys: _*)
   }
 

@@ -11,12 +11,20 @@ import org.apache.spark.sql.functions._
   * SQL replay reproduces each rank bit-for-bit — the hash-checkable
   * promotion the sketch family (q82/q83) made.
   *
+  * Shared kernel: the walkers make their edge tables through ONE function
+  * per edge shape — [[undirectedEdges]] (`x < y` pairs: triangles, k-core,
+  * link prediction) and [[directedEdges]] (src-keyed arcs: BFS, closeness,
+  * betweenness) — and the iterated walks (PageRank global and seeded,
+  * TextRank's word graph, label propagation) run their generations through
+  * ONE pin loop, [[generations]].
+  *
   * Scale posture: the textbook message-passing shape — per iteration ONE
   * join of the (pre-degree'd) edge table with the current rank table on
   * src and ONE groupBy(dst) sum, both keyed shuffles that AQE co-plans;
   * ranks never leave the executors (no driver collect at any size), and
   * the edge table is degree-annotated exactly once up front. */
 object Graph {
+  import org.apache.spark.storage.StorageLevel
 
   /** Materialize every Nth generation of an iterative walk instead of
     * every generation: shallow walks (the contract's 3-round queries) run
@@ -25,6 +33,71 @@ object Graph {
     * plan tower dominates driver time. */
   private[operators] val GenEvery = 4
 
+  /** The UNDIRECTED edge substrate: one `(x, y)` row per edge with
+    * x < y — endpoints cast to long, nulls and self-loops dropped, spread
+    * on both columns (so the dedup reuses the spread exchange), deduped
+    * and pinned once ([[Materialize.transient]]): every caller reads it
+    * from several subtrees and Spark has no common-subplan reuse. */
+  private def undirectedEdges(edges: DataFrame, aCol: String,
+                              bCol: String): DataFrame =
+    Materialize.transient(edges
+      .select(col(aCol).cast("long").as("graft_a"),
+        col(bCol).cast("long").as("graft_b"))
+      .filter(col("graft_a") =!= col("graft_b") &&
+        col("graft_a").isNotNull && col("graft_b").isNotNull)
+      .select(least(col("graft_a"), col("graft_b")).as("x"),
+        greatest(col("graft_a"), col("graft_b")).as("y"))
+      .transform(graft.Tables.spread)
+      .distinct())
+
+  /** The DIRECTED edge substrate: deduped `(graft_s, graft_d)` arcs, long
+    * endpoints, nulls and self-loops dropped, pinned once. Spread BY THE
+    * SRC KEY: every hop/level join keys the edge table on graft_s, so the
+    * pinned table arrives pre-clustered for every round (guide §2.4). */
+  private def directedEdges(edges: DataFrame, srcCol: String,
+                            dstCol: String): DataFrame =
+    Materialize.transient(edges
+      .select(col(srcCol).cast("long").as("graft_s"),
+        col(dstCol).cast("long").as("graft_d"))
+      .filter(col("graft_s").isNotNull && col("graft_d").isNotNull &&
+        col("graft_s") =!= col("graft_d"))
+      .transform(df => graft.Tables.spreadBy(df, Seq(col("graft_s"))))
+      .distinct())
+
+  /** Persist `df` and fill it before anything reads it. */
+  private def pin(df: DataFrame): DataFrame = {
+    val p = df.persist(StorageLevel.MEMORY_AND_DISK)
+    p.count()
+    p
+  }
+
+  /** The generation loop of every iterated walk: `iters` applications of
+    * `step` from `init`, materializing every [[GenEvery]]-th generation
+    * (each fills before the generation it reads is released), then
+    * `finish` on the last one. Persisted generations and the caller's
+    * `pinned` tables are released on return — also when a step or the
+    * final action throws; without that, a failed run leaks
+    * MEMORY_AND_DISK blocks for the session lifetime. */
+  private def generations(init: DataFrame, iters: Int, pinned: DataFrame*)(
+      step: DataFrame => DataFrame)(finish: DataFrame => DataFrame): DataFrame = {
+    var cur = init
+    var persisted: DataFrame = null
+    try {
+      for (i <- 1 to iters) {
+        cur = step(cur)
+        if (i % GenEvery == 0 && i < iters) {
+          val p = pin(cur)
+          if (persisted ne null) persisted.unpersist()
+          persisted = p
+          cur = p
+        }
+      }
+      finish(cur)
+    } finally {
+      if (persisted ne null) persisted.unpersist()
+      pinned.foreach(_.unpersist())
+    }
+  }
 
   /** PageRank in integer micro-units. `edges` is DIRECTED (pass both
     * directions for an undirected graph); every node must have out-degree
@@ -35,140 +108,73 @@ object Graph {
     * contribution of src u = rank(u) div outdeg(u); rank'(v) =
     * (r0*15) div 100  +  (85 * Σ contributions(v)) div 100 — the damping
     * 0.85 applied as `(85*s) div 100`, exact on any engine. Returns the
-    * `topK` nodes by final rank (ties → lower node id). */
+    * `topK` nodes by final rank (ties → lower node id).
+    *
+    * PERSONALIZED with a non-empty `seeds`: the teleport mass returns to
+    * the SEED SET instead of everywhere — "importance relative to THESE
+    * nodes", the related-items / similar-suppliers primitive (Gleich, SIAM
+    * Rev. 2015 §5). Seeds start at `r0`, everyone else at 0; each round
+    * only seeds receive the (r0·15 div 100) refill while all nodes
+    * accumulate 85% of in-neighbor contributions, so mass concentrates
+    * around the seeds; nodes the walk never reached (rank 0) are dropped.
+    * The seed set rides in as a literal IN-list (seed counts are
+    * query-sized, never corpus-sized); the walk's shape is unchanged. */
   def pagerankPortable(edges: DataFrame, srcCol: String, dstCol: String,
-                       iters: Int, topK: Int,
+                       iters: Int, topK: Int, seeds: Seq[Long] = Nil,
                        r0: Long = 1000000L): DataFrame = {
-    require(iters >= 1, "iters must be at least 1")
-    require(topK >= 1, "topK must be at least 1")
-    // Pregel discipline (the [[Components]] loop's): the edge table is
-    // persisted ONCE (every iteration re-reads cached blocks instead of
-    // replaying distinct + degree join). Rank generations materialize
-    // every [[GenEvery]] iterations, NOT every iteration: a 3-round walk
-    // then runs as ONE fused action (per-round actions were pure
-    // job-scheduling overhead at every scale — the rounds are sequential
-    // shuffles either way), while deep walks still get their lineage
-    // truncated before Catalyst re-optimization of the plan tower
-    // dominates. ed/nodes are counted up front so the fused action's
-    // concurrent leaf stages read filled caches instead of racing to
-    // build them.
-    import org.apache.spark.storage.StorageLevel
     // Spread a low-split edge scan BY THE SRC KEY (guide §2.4/§2.5;
     // identity at scale): hash(graft_src) clusters the frame for the
     // dedup, the degree aggregate, the degree join AND every iteration's
     // rank join — one exchange where the struct-keyed form paid four.
-    val e = graft.Tables.spreadBy(
+    walk(graft.Tables.spreadBy(
       edges.select(col(srcCol).cast("long").as("graft_src"),
         col(dstCol).cast("long").as("graft_dst")),
-      Seq(col("graft_src"))).distinct()
+      Seq(col("graft_src"))).distinct(), iters, topK, seeds, r0)
+  }
+
+  /** The integer PageRank walk ([[pagerankPortable]]'s arithmetic) over a
+    * deduped `(graft_src, graft_dst)` edge frame whose node key may be any
+    * type — [[Search.textRank]] walks WORD keys through it. Returns the
+    * pinned top-`topK` `(node, rank)` artifact, rank desc then node asc. */
+  private[operators] def walk(e: DataFrame, iters: Int, topK: Int,
+                              seeds: Seq[Long] = Nil,
+                              r0: Long = 1000000L): DataFrame = {
+    require(iters >= 1, "iters must be at least 1")
+    require(topK >= 1, "topK must be at least 1")
+    // Pregel discipline (the [[Components]] loop's): the edge table is
+    // persisted ONCE (every iteration re-reads cached blocks instead of
+    // replaying distinct + degree join), and rank generations go through
+    // [[generations]]. ed/nodes are counted up front so the fused action's
+    // concurrent leaf stages read filled caches instead of racing to
+    // build them.
     val deg = e.groupBy("graft_src").agg(count(lit(1)).as("graft_deg"))
-    val ed = e.join(deg, "graft_src").persist(StorageLevel.MEMORY_AND_DISK)
-    ed.count() // fill the edge cache before anything reads it
+    val ed = pin(e.join(deg, "graft_src"))
     // nodes FROM the just-persisted ed, not from e: the degree join keeps
     // every src (deg covers all of them), so the node set is identical —
     // and the scan→spread→distinct substrate builds ONCE instead of twice
     // (profiled: the duplicate build was 2 of q131's top-5 stages).
-    val nodes = ed.select(col("graft_src").as("node")).distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    nodes.count()
+    val nodes = pin(ed.select(col("graft_src").as("node")).distinct())
     val base = r0 * 15L / 100L
-    var ranks = nodes.withColumn("rank", lit(r0))
-    // Persisted generations are released even when an iteration or the
-    // final action throws — without the finally, a failed run leaks
-    // MEMORY_AND_DISK blocks for the session lifetime.
-    var persisted: DataFrame = null
-    try {
-      for (i <- 1 to iters) {
-        val msgs = ed
-          .join(ranks.withColumnRenamed("node", "graft_src"), "graft_src")
-          .select(col("graft_dst").as("node"),
-            expr("rank div graft_deg").as("graft_c"))
-          .groupBy("node").agg(sum("graft_c").as("graft_s"))
-        ranks = nodes.join(msgs, Seq("node"), "left")
-          .select(col("node"),
-            (lit(base) + expr("coalesce(graft_s, 0L) * 85 div 100"))
-              .as("rank"))
-        if (i % GenEvery == 0 && i < iters) {
-          val p = ranks.persist(StorageLevel.MEMORY_AND_DISK)
-          p.count() // materialize before dropping the generation it reads
-          if (persisted ne null) persisted.unpersist()
-          persisted = p
-          ranks = p
-        }
+    val (start, refill) =
+      if (seeds.isEmpty) (lit(r0), lit(base))
+      else {
+        val isSeed = col("node").isin(seeds: _*)
+        (when(isSeed, lit(r0)).otherwise(lit(0L)),
+          when(isSeed, lit(base)).otherwise(lit(0L)))
       }
+    generations(nodes.withColumn("rank", start), iters, ed, nodes) { ranks =>
+      val msgs = ed
+        .join(ranks.withColumnRenamed("node", "graft_src"), "graft_src")
+        .select(col("graft_dst").as("node"),
+          expr("rank div graft_deg").as("graft_c"))
+        .groupBy("node").agg(sum("graft_c").as("graft_s"))
+      nodes.join(msgs, Seq("node"), "left")
+        .select(col("node"),
+          (refill + expr("coalesce(graft_s, 0L) * 85 div 100")).as("rank"))
+    } { ranks =>
+      val reached = if (seeds.isEmpty) ranks else ranks.filter(col("rank") > 0)
       Materialize.artifact(
-        ranks.orderBy(col("rank").desc, col("node").asc).limit(topK))
-    } finally {
-      if (persisted ne null) persisted.unpersist()
-      ed.unpersist(); nodes.unpersist()
-    }
-  }
-
-  /** Personalized PageRank — [[pagerankPortable]] with the teleport mass
-    * returning to a SEED SET instead of everywhere: "importance relative
-    * to THESE nodes", the related-items / similar-suppliers primitive
-    * (Gleich, SIAM Rev. 2015 §5). Same engine-portable integer
-    * discipline: ranks in micro-units, per-iteration floor divisions at
-    * fixed points, so an unrolled SQL replay reproduces every rank
-    * bit-for-bit. Seeds start at `r0`, everyone else at 0; each round,
-    * only seeds receive the (r0·15 div 100) teleport refill while all
-    * nodes accumulate 85% of in-neighbor contributions — mass
-    * concentrates around the seeds instead of spreading uniformly.
-    *
-    * Scale: identical shape to the global walk — the seed set rides in
-    * as a broadcast literal IN-list (seed counts are query-sized, never
-    * corpus-sized); per iteration one src-keyed join + one dst-keyed
-    * sum over the edge list. */
-  def personalizedPagerank(edges: DataFrame, srcCol: String, dstCol: String,
-                           seeds: Seq[Long], iters: Int, topK: Int,
-                           r0: Long = 1000000L): DataFrame = {
-    require(seeds.nonEmpty, "personalized PageRank needs at least one seed")
-    require(iters >= 1 && topK >= 1, "iters and topK must be positive")
-    import org.apache.spark.storage.StorageLevel
-    // src-keyed spread: one exchange shared by dedup/degree/joins — see
-    // [[pagerankPortable]].
-    val e = graft.Tables.spreadBy(
-      edges.select(col(srcCol).cast("long").as("graft_src"),
-        col(dstCol).cast("long").as("graft_dst")),
-      Seq(col("graft_src"))).distinct()
-    val deg = e.groupBy("graft_src").agg(count(lit(1)).as("graft_deg"))
-    val ed = e.join(deg, "graft_src").persist(StorageLevel.MEMORY_AND_DISK)
-    ed.count()
-    // nodes from the persisted ed — one substrate build, not two (see
-    // [[pagerankPortable]]).
-    val nodes = ed.select(col("graft_src").as("node")).distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    nodes.count()
-    val isSeed = col("node").isin(seeds: _*)
-    val base = r0 * 15L / 100L
-    var ranks = nodes
-      .withColumn("rank", when(isSeed, lit(r0)).otherwise(lit(0L)))
-    var persisted: DataFrame = null
-    try {
-      for (i <- 1 to iters) {
-        val msgs = ed
-          .join(ranks.withColumnRenamed("node", "graft_src"), "graft_src")
-          .select(col("graft_dst").as("node"),
-            expr("rank div graft_deg").as("graft_c"))
-          .groupBy("node").agg(sum("graft_c").as("graft_s"))
-        ranks = nodes.join(msgs, Seq("node"), "left")
-          .select(col("node"),
-            (when(isSeed, lit(base)).otherwise(lit(0L)) +
-              expr("coalesce(graft_s, 0L) * 85 div 100")).as("rank"))
-        if (i % GenEvery == 0 && i < iters) {
-          val p = ranks.persist(StorageLevel.MEMORY_AND_DISK)
-          p.count()
-          if (persisted ne null) persisted.unpersist()
-          persisted = p
-          ranks = p
-        }
-      }
-      Materialize.artifact(
-        ranks.filter(col("rank") > 0)
-          .orderBy(col("rank").desc, col("node").asc).limit(topK))
-    } finally {
-      if (persisted ne null) persisted.unpersist()
-      ed.unpersist(); nodes.unpersist()
+        reached.orderBy(col("rank").desc, col("node").asc).limit(topK))
     }
   }
 
@@ -318,18 +324,11 @@ object Graph {
   def triangleStats(edges: DataFrame, aCol: String, bCol: String): DataFrame = {
     // The deduped edge table feeds FIVE subtrees (degree build, both
     // orientation joins, the closing semi-join, the per-node fold) and
-    // Spark has no common-subplan reuse — pin it once, and the oriented
-    // table (two wedge legs) likewise ([[Materialize.transient]]'s
-    // contract: executor-local blocks, GC-freed).
-    val e0 = Materialize.transient(edges
-      .select(col(aCol).cast("long").as("graft_a"),
-        col(bCol).cast("long").as("graft_b"))
-      .filter(col("graft_a") =!= col("graft_b") &&
-        col("graft_a").isNotNull && col("graft_b").isNotNull)
-      .select(least(col("graft_a"), col("graft_b")).as("x"),
-        greatest(col("graft_a"), col("graft_b")).as("y"))
-      .transform(graft.Tables.spread)
-      .distinct())
+    // Spark has no common-subplan reuse — [[undirectedEdges]] pins it
+    // once, and the oriented table (two wedge legs) is pinned likewise
+    // ([[Materialize.transient]]'s contract: executor-local blocks,
+    // GC-freed).
+    val e0 = undirectedEdges(edges, aCol, bCol)
     val deg = e0.select(explode(array(col("x"), col("y"))).as("n"))
       .groupBy("n").agg(count(lit(1)).as("graft_deg"))
     val withDeg = e0
@@ -442,15 +441,7 @@ object Graph {
   def kCore(edges: DataFrame, aCol: String, bCol: String, k: Int,
             maxRounds: Int = 10): DataFrame = {
     require(k >= 1 && maxRounds >= 1, "k and maxRounds must be positive")
-    var e = Materialize.transient(edges
-      .select(col(aCol).cast("long").as("graft_a"),
-        col(bCol).cast("long").as("graft_b"))
-      .filter(col("graft_a") =!= col("graft_b") &&
-        col("graft_a").isNotNull && col("graft_b").isNotNull)
-      .select(least(col("graft_a"), col("graft_b")).as("x"),
-        greatest(col("graft_a"), col("graft_b")).as("y"))
-      .transform(graft.Tables.spread)
-      .distinct())
+    var e = undirectedEdges(edges, aCol, bCol)
     var round = 0
     var converged = false
     while (round < maxRounds && !converged) {
@@ -496,15 +487,7 @@ object Graph {
     val seedIds = seeds.distinct
     val spark = edges.sparkSession
     import spark.implicits._
-    val e = Materialize.transient(edges
-      .select(col(srcCol).cast("long").as("graft_s"),
-        col(dstCol).cast("long").as("graft_d"))
-      .filter(col("graft_s").isNotNull && col("graft_d").isNotNull &&
-        col("graft_s") =!= col("graft_d"))
-      // src-keyed spread: the hop joins key on graft_s, so the pinned
-      // edge table arrives pre-clustered for every round (guide §2.4).
-      .transform(df => graft.Tables.spreadBy(df, Seq(col("graft_s"))))
-      .distinct())
+    val e = directedEdges(edges, srcCol, dstCol)
     var visited = Materialize.transient(
       seedIds.toDF("node").select(col("node").cast("long").as("node"),
         lit(0L).as("hops")))
@@ -553,13 +536,12 @@ object Graph {
     * the edge list, one (node, label) count, one per-node argmax window
     * (partitioned by node — bounded by the node's distinct neighbor
     * labels, never global). Same Pregel pin discipline as
-    * [[pagerankPortable]]: cached edges, per-generation persist +
-    * previous-generation release, so lineage stays one round deep. */
+    * [[pagerankPortable]]: cached edges and the [[generations]] loop, so
+    * a 3-round propagation runs as one fused action. */
   def labelPropagation(edges: DataFrame, aCol: String, bCol: String,
                        iters: Int, topK: Int): DataFrame = {
     require(iters >= 1, "iters must be at least 1")
     require(topK >= 1, "topK must be at least 1")
-    import org.apache.spark.storage.StorageLevel
     val und = edges
       .select(col(aCol).cast("long").as("graft_a"),
         col(bCol).cast("long").as("graft_b"))
@@ -568,45 +550,27 @@ object Graph {
     // Keyed by graft_b: the per-round label join keys on the NEIGHBOR
     // column, so the one spread exchange serves the dedup and every
     // round's edge-side join (see [[pagerankPortable]]'s src-keyed twin).
-    val e = graft.Tables.spreadBy(
+    val e = pin(graft.Tables.spreadBy(
         und.unionByName(und.select(col("graft_b").as("graft_a"),
           col("graft_a").as("graft_b"))), Seq(col("graft_b")))
-      .distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    e.count()
-    var labels = e.select(col("graft_a").as("node"))
+      .distinct())
+    val init = e.select(col("graft_a").as("node"))
       .distinct().withColumn("lbl", col("node"))
-    var persisted: DataFrame = null
-    try {
-      for (i <- 1 to iters) {
-        val counts = e
-          .join(labels.withColumnRenamed("node", "graft_b"), "graft_b")
-          .groupBy(col("graft_a").as("node"), col("lbl"))
-          .agg(count(lit(1)).as("graft_c"))
-        labels = counts
-          .withColumn("graft_rn", row_number().over(
-            org.apache.spark.sql.expressions.Window.partitionBy("node")
-              .orderBy(col("graft_c").desc, col("lbl").asc)))
-          .filter(col("graft_rn") === 1)
-          .select("node", "lbl")
-        // Materialize every GenEvery-th generation only ([[GenEvery]]):
-        // a 3-round propagation runs as one fused action.
-        if (i % GenEvery == 0 && i < iters) {
-          val p = labels.persist(StorageLevel.MEMORY_AND_DISK)
-          p.count() // materialize before releasing the generation it reads
-          if (persisted ne null) persisted.unpersist()
-          persisted = p
-          labels = p
-        }
-      }
+    generations(init, iters, e) { labels =>
+      e.join(labels.withColumnRenamed("node", "graft_b"), "graft_b")
+        .groupBy(col("graft_a").as("node"), col("lbl"))
+        .agg(count(lit(1)).as("graft_c"))
+        .withColumn("graft_rn", row_number().over(
+          org.apache.spark.sql.expressions.Window.partitionBy("node")
+            .orderBy(col("graft_c").desc, col("lbl").asc)))
+        .filter(col("graft_rn") === 1)
+        .select("node", "lbl")
+    } { labels =>
       Materialize.artifact(labels
         .groupBy(col("lbl").as("community"))
         .agg(count(lit(1)).cast("long").as("n_members"))
         .orderBy(col("n_members").desc, col("community").asc)
         .limit(topK))
-    } finally {
-      if (persisted ne null) persisted.unpersist()
-      e.unpersist()
     }
   }
 
@@ -635,15 +599,7 @@ object Graph {
                      maxDeg: Int, topK: Int): DataFrame = {
     require(maxDeg >= 2, "maxDeg must be at least 2")
     require(topK >= 1, "topK must be at least 1")
-    val e0 = Materialize.transient(edges
-      .select(col(aCol).cast("long").as("graft_a"),
-        col(bCol).cast("long").as("graft_b"))
-      .filter(col("graft_a") =!= col("graft_b") &&
-        col("graft_a").isNotNull && col("graft_b").isNotNull)
-      .select(least(col("graft_a"), col("graft_b")).as("x"),
-        greatest(col("graft_a"), col("graft_b")).as("y"))
-      .transform(graft.Tables.spread)
-      .distinct())
+    val e0 = undirectedEdges(edges, aCol, bCol)
     val deg = e0.select(explode(array(col("x"), col("y"))).as("n"))
       .groupBy("n").agg(count(lit(1)).as("graft_deg"))
     val adj = e0.select(col("x").as("graft_z"), col("y").as("graft_v"))
@@ -695,14 +651,7 @@ object Graph {
     val seedIds = seeds.distinct
     val spark = edges.sparkSession
     import spark.implicits._
-    val e = Materialize.transient(edges
-      .select(col(srcCol).cast("long").as("graft_s"),
-        col(dstCol).cast("long").as("graft_d"))
-      .filter(col("graft_s").isNotNull && col("graft_d").isNotNull &&
-        col("graft_s") =!= col("graft_d"))
-      // src-keyed spread: the per-hop frontier joins key on graft_s.
-      .transform(df => graft.Tables.spreadBy(df, Seq(col("graft_s"))))
-      .distinct())
+    val e = directedEdges(edges, srcCol, dstCol)
     var visited = Materialize.transient(
       seedIds.toDF("seed").select(col("seed").cast("long").as("seed"),
         col("seed").as("node"), lit(0L).as("hops")))
@@ -762,15 +711,7 @@ object Graph {
     val seedIds = seeds.distinct
     val spark = edges.sparkSession
     import spark.implicits._
-    val e = Materialize.transient(edges
-      .select(col(srcCol).cast("long").as("graft_s"),
-        col(dstCol).cast("long").as("graft_d"))
-      .filter(col("graft_s").isNotNull && col("graft_d").isNotNull &&
-        col("graft_s") =!= col("graft_d"))
-      // src-keyed spread: both the forward level joins and the backward
-      // dependency joins key the edge table on graft_s.
-      .transform(df => graft.Tables.spreadBy(df, Seq(col("graft_s"))))
-      .distinct())
+    val e = directedEdges(edges, srcCol, dstCol)
     // forward: per-level (seed, node, sigma) frames
     val level0 = Materialize.transient(
       seedIds.toDF("seed").select(col("seed").cast("long").as("seed"),

@@ -564,11 +564,11 @@ object Search {
     * length-filtered token sequence, and PageRank over that graph ranks
     * corpus keywords — centrality finds the terms everything else
     * orbits, where raw frequency just finds stop-ish words. The walk is
-    * [[graft.operators.Graph.pagerankPortable]]'s integer discipline
-    * inlined on WORD keys (micro-unit ranks, per-step floor divisions,
-    * generations pinned with truncated lineage — the q272 lesson), so
-    * the oracle unrolls the identical `iters` steps and a graph-NLP
-    * operator hash-checks; ties break on the word itself, not an id.
+    * [[Graph.walk]], the one behind [[Graph.pagerankPortable]], run on
+    * WORD keys (micro-unit ranks, per-step floor divisions, the shared
+    * generation pins), so the oracle unrolls the identical `iters` steps
+    * and a graph-NLP operator hash-checks; ties break on the word itself,
+    * not an id.
     *
     * Scale: one tokenize + windowed-lead pass (corpus-token-sized,
     * map-heavy, one doc-keyed shuffle), then everything runs on the
@@ -589,43 +589,18 @@ object Search {
     val leads = toks.select(col("graft_w") +:
       (1 to coWindow).map(k =>
         lead(col("graft_w"), k).over(wDoc).as(s"graft_n$k")): _*)
-    // Pinned: the pair table appears twice in e (direct + reversed) and
-    // each branch would otherwise re-run the tokenize + lead window.
+    // Pinned: the pair table appears twice in the edge frame (direct +
+    // reversed) and each branch would otherwise re-run the tokenize +
+    // lead window.
     val pairs = Materialize.transient((1 to coWindow).map(k =>
       leads.select(col("graft_w").as("graft_a"),
         col(s"graft_n$k").as("graft_b")))
       .reduce(_ unionByName _)
       .filter(col("graft_b").isNotNull && col("graft_a") =!= col("graft_b")))
-    val e = Materialize.transient(
-      pairs.unionByName(pairs.select(col("graft_b").as("graft_a"),
-        col("graft_a").as("graft_b"))).distinct())
-    val deg = e.groupBy(col("graft_a").as("graft_src"))
-      .agg(count(lit(1)).as("graft_deg"))
-    val ed = Materialize.transient(
-      e.select(col("graft_a").as("graft_src"), col("graft_b").as("graft_dst"))
-        .join(deg, "graft_src"))
-    val nodes = Materialize.transient(
-      ed.select(col("graft_src").as("word")).distinct())
-    val r0 = 1000000L
-    val base = r0 * 15L / 100L
-    var ranks = nodes.withColumn("rank", lit(r0))
-    for (i <- 1 to iters) {
-      val msgs = ed
-        .join(ranks.withColumnRenamed("word", "graft_src"), "graft_src")
-        .select(col("graft_dst").as("word"),
-          expr("rank div graft_deg").as("graft_c"))
-        .groupBy("word").agg(sum("graft_c").as("graft_s"))
-      ranks = nodes.join(msgs, Seq("word"), "left")
-        .select(col("word"),
-          (lit(base) + expr("coalesce(graft_s, 0L) * 85 div 100"))
-            .as("rank"))
-      // Pin only every 4th generation (the [[Graph.GenEvery]] discipline):
-      // a 3-round walk over the pinned ed/nodes runs as ONE fused action.
-      if (i % 4 == 0 && i < iters)
-        ranks = Materialize.transient(ranks)
-    }
-    ranks.select(col("word"), col("rank").as("rank_micro"))
-      .orderBy(col("rank_micro").desc, col("word").asc)
-      .limit(topK)
+    Graph.walk(
+      pairs.select(col("graft_a").as("graft_src"), col("graft_b").as("graft_dst"))
+        .unionByName(pairs.select(col("graft_b").as("graft_src"),
+          col("graft_a").as("graft_dst"))).distinct(), iters, topK)
+      .select(col("node").as("word"), col("rank").as("rank_micro"))
   }
 }

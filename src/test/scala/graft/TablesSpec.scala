@@ -47,6 +47,19 @@ class TablesSpec extends SparkSpec {
     assert(joined.count() === expected)
   }
 
+  test("spreadBy over a self-joined frame neither throws nor launches a job") {
+    // The q209/q229 edge shape: a deduped (order, item) table joined to
+    // itself on the order. Its unprepared plan broadcasts an aggregate,
+    // which cannot execute before the exchanges are planned.
+    val items = (1L to 40L).map(i => (i % 8, i % 5)).toDF("o", "i").distinct()
+    val edges = items.select($"o", $"i".as("a"))
+      .join(items.select($"o", $"i".as("b")), "o")
+      .filter($"a" < $"b").select("a", "b")
+    var spread: org.apache.spark.sql.DataFrame = null
+    assert(jobsLaunched { spread = Tables.spreadBy(edges, Seq($"a")) } === 0)
+    assert(spread.count() === edges.count())
+  }
+
   test("events keeps its ts / ts_t contract on a cached schema") {
     val d = tmpDir("graft_tables_events")
     val t0 = java.time.Instant.parse("2024-03-01T12:34:56.789012Z")

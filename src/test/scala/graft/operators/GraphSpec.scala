@@ -109,7 +109,7 @@ class GraphSpec extends SparkSpec {
     val und = (cliqueA ++ cliqueB ++ bridge).flatMap {
       case (a, b) => Seq((a, b), (b, a))
     }
-    val got = Graph.personalizedPagerank(und.toDF("src", "dst"),
+    val got = Graph.pagerankPortable(und.toDF("src", "dst"),
         "src", "dst", seeds = Seq(1L), iters = 3, topK = 10)
       .as[(Long, Long)].collect().toMap
     assert(got(1L) > got(2L) && got(2L) > 0L)
@@ -123,10 +123,27 @@ class GraphSpec extends SparkSpec {
     // it2: rank1 = 150000 + 850000·85 div 100 = 872500;
     //      rank2 = 150000·85 div 100 = 127500.
     val edges = Seq((1L, 2L), (2L, 1L)).toDF("src", "dst")
-    val got = Graph.personalizedPagerank(edges, "src", "dst",
+    val got = Graph.pagerankPortable(edges, "src", "dst",
         seeds = Seq(1L), iters = 2, topK = 10)
       .as[(Long, Long)].collect().toMap
     assert(got === Map(1L -> 872500L, 2L -> 127500L))
+  }
+
+  test("bfsHops: multi-seed hop profile, repeated seed, unreachable nodes") {
+    // Chain 1→2→3→4→5 plus a separate 6→7, a self-loop, a null endpoint
+    // and a duplicate arc. Seeds {1, 4, 1}: hop 0 = {1, 4} (the repeated
+    // 1 counts once), hop 1 = {2, 5}, hop 2 = {3} (2→2 is dropped), and
+    // hop 3 finds only the visited 4, so the walk stops. 6 and 7 are
+    // never reached and appear in no row.
+    val edges = Seq[(java.lang.Long, java.lang.Long)]((1L, 2L), (2L, 3L),
+      (3L, 4L), (4L, 5L), (6L, 7L), (2L, 2L), (5L, null), (1L, 2L))
+      .toDF("src", "dst")
+    def hops(maxHops: Int) =
+      Graph.bfsHops(edges, "src", "dst", seeds = Seq(1L, 4L, 1L), maxHops)
+        .as[(Long, Long, Long, Long)].collect().sortBy(_._1).toSeq
+    assert(hops(5) === Seq((0L, 2L, 1L, 4L), (1L, 2L, 2L, 5L), (2L, 1L, 3L, 3L)))
+    // the radius caps the expansion
+    assert(hops(1) === Seq((0L, 2L, 1L, 4L), (1L, 2L, 2L, 5L)))
   }
 
   test("kCore: a pendant chain cascades away over rounds; the core stays") {
