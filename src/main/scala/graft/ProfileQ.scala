@@ -49,7 +49,7 @@ object ProfileQ {
         val t0 = System.nanoTime()
         fn(spark, sfDir).count()
         val dt = (System.nanoTime() - t0) / 1e9
-        Thread.sleep(400) // let the listener bus drain
+        org.apache.spark.graftbridge.ListenerBusBridge.drain(spark.sparkContext)
         println(f"===== $name rep$r: $dt%.3f s, $jobs jobs, ${stages.size} stages =====")
         if (r == reps) {
           val rows = stages.values.toSeq.sortBy(-_.ms).take(20)

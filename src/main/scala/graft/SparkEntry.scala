@@ -24,12 +24,8 @@ object SparkEntry
     * under java.io.tmpdir. */
   private[graft] def tempTableDir(prefix: String): String = {
     val p = java.nio.file.Files.createTempDirectory(prefix)
-    Runtime.getRuntime.addShutdownHook(new Thread(() => {
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
-      }
-      rm(p.toFile)
-    }))
+    Runtime.getRuntime.addShutdownHook(new Thread(() =>
+      sources.WarehouseSink.deleteRecursively(p.toFile)))
     p.toString
   }
 
@@ -56,7 +52,6 @@ object SparkEntry
         lit(10000L)), lit(0L)).cast("long").as("score_q"),
       (col("n_chars") >= 300).cast("long").as("label"))
 
-  /** Events with the shared-grain µs timestamp column (see q38-q40 note). */
   /** One catalog root per JVM: the catalog caches its root at first
     * initialization, so every query must hand it the same directory —
     * per-sfDir isolation comes from the namespace instead. */
@@ -67,6 +62,7 @@ object SparkEntry
     s.conf.set("spark.sql.catalog.graft.root", catalogRoot)
   }
 
+  /** Events with the shared-grain µs timestamp column (see q38-q40 note). */
   private[graft] def eventsUs(s: SparkSession, d: String): DataFrame =
     Tables.events(s, d).withColumn("ts_us", expr("ts div 1000"))
 
@@ -249,9 +245,6 @@ object SparkEntry
       (store, side)
     })
 
-  /** Drop every memoized substrate (pair stats, RF fits) so their blocks
-    * and models become collectable — drivers call this once their query
-    * sweep is done. */
   /** Drop only the ML-FIT memos (RF family, the q26 clustering) — the
     * bench's median-of-3 repeats call this between repetitions so every
     * sample pays the real fit instead of a memo hit, while the shared
@@ -275,6 +268,10 @@ object SparkEntry
     spanCache.getOrElseUpdate((s, d), operators.Materialize.transient(
       Dedup.dupSpans(Tables.documents(s, d), "doc_id", "text", k = 8)))
 
+  /** Drop every memoized substrate (pair stats, spans, index stores, ML
+    * fits, IVF/PQ indexes) and the parquet schema memo so their blocks
+    * and models become collectable — Verify, Bench and ProfileQ call
+    * this once their query sweep is done. */
   def releaseCaches(): Unit = {
     Tables.clearSchemas()
     spanCache.clear()
@@ -354,13 +351,6 @@ object SparkEntry
         Seq("l_quantity", "l_discount", "l_tax"), "l_extendedprice")
     })
 
-  /** The q25 random-projection oracle, generated: the hyperplane weights
-    * sin(i·(j+1)) are plain doubles computed once here and embedded as
-    * shortest-round-trip literals, so DuckDB reproduces the EXACT bucket
-    * assignment (list_dot_product folds left-to-right like Spark's
-    * `aggregate`, and Double.toString literals parse back to the identical
-    * bits). That turns the "probabilistic" candidate set deterministic
-    * across engines and lets the full (vec_id, cos) result hash-match. */
   /** q349's oracle: the q325 span replay templated per anchor length k
     * and UNION ALL'd — the sweep IS three independent replays. */
   private[graft] def spanSweepOracleSql: String =
@@ -397,6 +387,13 @@ object SparkEntry
            FROM spans)"""
     }.mkString("\nUNION ALL\n")
 
+  /** The q25 random-projection oracle, generated: the hyperplane weights
+    * sin(i·(j+1)) are plain doubles computed once here and embedded as
+    * shortest-round-trip literals, so DuckDB reproduces the EXACT bucket
+    * assignment (list_dot_product folds left-to-right like Spark's
+    * `aggregate`, and Double.toString literals parse back to the identical
+    * bits). That turns the "probabilistic" candidate set deterministic
+    * across engines and lets the full (vec_id, cos) result hash-match. */
   private[graft] def q25OracleSql: String = {
     def weights(j: Int): String =
       (0 until 64).map(i => java.lang.Double.toString(math.sin(i.toDouble * (j + 1))))

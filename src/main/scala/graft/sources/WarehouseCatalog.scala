@@ -199,10 +199,7 @@ class WarehouseCatalog extends TableCatalog with FunctionCatalog {
   override def dropTable(ident: Identifier): Boolean = {
     val dir = new File(dirFor(ident))
     if (!new File(dir, "_current").isFile) return false
-    def rm(f: File): Unit = {
-      Option(f.listFiles()).foreach(_.foreach(rm)); f.delete()
-    }
-    rm(dir)
+    WarehouseSink.deleteRecursively(dir)
     true
   }
 

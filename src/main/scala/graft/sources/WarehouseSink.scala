@@ -628,16 +628,11 @@ object WarehouseSink {
       s"warehouse manifest contention at $dir: gave up after $attempts attempts")
   }
 
-  /** Drop generations older than the newest `keepVersions`: their
-    * manifest files, and every data file no RETAINED manifest references.
-    * Commits never delete data (truncate only un-references the old
-    * generation), so history stays readable via `versionAsOf` until this
-    * maintenance pass reclaims it — the Delta/Iceberg VACUUM contract.
-    * Single-writer: run it from the table's owning job, not concurrently
-    * with a commit. Returns the number of files removed. */
   /** Row-level change data feed, Delta-style and OPT-IN per table:
-    * after [[enableChangeFeed]], every copy-on-write DML
-    * (deleteWhere / updateWhere / merge) captures its changed ROWS —
+    * after [[enableChangeFeed]], every DML verb — copy-on-write
+    * (deleteWhere / updateWhere / merge) and merge-on-read
+    * (deleteWhereMoR / updateWhereMoR / mergeMoR / applyChangesMoR /
+    * syncMoR) — captures its changed ROWS —
     * before/after images, not file diffs — into change files referenced
     * by the SAME manifest generation the DML publishes (atomic: a crash
     * before publish leaves only unreferenced staging, never a dangling
@@ -658,39 +653,38 @@ object WarehouseSink {
   private[sources] def cdfEnabled(dir: String): Boolean =
     new File(dir, "_cdf").isFile
 
-  /** Stage CDF rows (table columns + _change_type) through the sink's
-    * own writer into the table dir; returns the file names to reference
-    * from the publishing manifest. */
-  private def stageChanges(dir: String,
-                           rows: org.apache.spark.sql.DataFrame): Seq[String] = {
+  /** Land `rows` in the table at `dir` WITHOUT publishing them: write
+    * through the sink's own staged commit into a throwaway sibling table
+    * (same volume, so every move is an atomic rename), move its files and
+    * sidecars into `dir`, and return the sibling's manifest — its `files`
+    * are what the caller's publish references. `checked` makes the
+    * sibling enforce `dir`'s CHECK policy, so a DML rewrite or append
+    * cannot smuggle in violating rows. The sibling is gone on return,
+    * thrown or not; a crash before the caller's publish leaves only
+    * unreferenced files, which [[vacuum]] reclaims. */
+  private def stageWrite(dir: String, rows: org.apache.spark.sql.DataFrame,
+                         checked: Boolean = false,
+                         options: Map[String, String] = Map.empty): Manifest = {
     val tmp = new File(new File(dir).getAbsoluteFile.getParentFile,
-      new File(dir).getName + ".cdf-" +
+      new File(dir).getName + ".stage-" +
         java.util.UUID.randomUUID.toString.take(8))
     try {
-      rows.write.format(classOf[WarehouseSink].getName)
+      if (checked) copyChecks(dir, tmp.getPath)
+      rows.write.format(classOf[WarehouseSink].getName).options(options)
         .option("path", tmp.getPath).mode("overwrite").save()
-      val fs = readManifest(tmp.getPath).map(_.files).getOrElse(Nil)
-      fs.foreach(moveWithStats(tmp, new File(dir), _))
-      fs
-    } finally {
-      def rm(f: File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rm)); f.delete()
-      }
-      rm(tmp)
-    }
+      val m = readManifest(tmp.getPath).getOrElse(
+        throw new IllegalStateException("staged write produced no manifest"))
+      m.files.foreach(moveWithStats(tmp, new File(dir), _))
+      m
+    } finally deleteRecursively(tmp)
   }
 
-  /** The row-level changes that took the table from `fromVersion` to
-    * `toVersion`: one row per change image with `_change_type` in
-    * (insert, delete, update_preimage, update_postimage) and
-    * `_commit_version` = the generation that committed it. DML versions
-    * replay from their captured change files (refused loudly if the DML
-    * ran with the feed disabled — enable it first, or diff with
-    * Etl.reconcile); append/stream/WAP versions synthesize insert images
-    * from their added files; truncate synthesizes delete images of the
-    * out-going generation plus inserts of the new one; maintenance
-    * (compaction/clustering) is layout-only — zero row changes by
-    * construction. Vacuumed ranges fail loudly, same as versionAsOf. */
+  /** Delete `f` and, for a directory, everything under it. */
+  private[graft] def deleteRecursively(f: File): Unit = {
+    Option(f.listFiles()).foreach(_.foreach(deleteRecursively))
+    f.delete()
+  }
+
   /** [[tableChanges]] addressed by NAMED REFS — "what changed between
     * release tags": resolves each name (tag or branch head) to its
     * pinned version and replays the row-level feed between them. The
@@ -712,22 +706,28 @@ object WarehouseSink {
     tableChanges(spark, dir, f, t)
   }
 
+  /** The row-level changes that took the table from `fromVersion` to
+    * `toVersion`: one row per change image with `_change_type` in
+    * (insert, delete, update_preimage, update_postimage) and
+    * `_commit_version` = the generation that committed it. DML versions
+    * replay from their captured change files (refused loudly if the DML
+    * ran with the feed disabled — enable it first, or diff with
+    * Etl.reconcile); append/stream/WAP versions synthesize insert images
+    * from their added files; truncate synthesizes delete images of the
+    * out-going generation plus inserts of the new one; maintenance
+    * (compaction/clustering) is layout-only — zero row changes by
+    * construction. Vacuumed ranges fail loudly, same as versionAsOf. */
   def tableChanges(spark: org.apache.spark.sql.SparkSession, dir: String,
                    fromVersion: Long, toVersion: Long):
       org.apache.spark.sql.DataFrame = {
     import org.apache.spark.sql.functions.{col, lit}
     require(fromVersion <= toVersion,
       s"fromVersion $fromVersion must be <= toVersion $toVersion")
-    val fmt = classOf[WarehouseSink].getName
     def manifestAt(v: Long) = readManifestAt(dir, v).getOrElse(
       throw new IllegalArgumentException(
         s"version $v of $dir does not exist (vacuumed or never written)"))
-    def readFiles(files: Seq[String], ddl: String,
-                  dvs: Seq[String] = Nil) =
-      spark.read.format(fmt).option("path", dir)
-        .option("readSchemaDdl", ddl)
-        .option("files", files.mkString(","))
-        .option("dvs", dvs.mkString(",")).load()
+    def readFiles(files: Seq[String], ddl: String, dvs: Seq[String] = Nil) =
+      scanFiles(spark, dir, files, dvs, Some(ddl))
     val steps = ((fromVersion + 1) to toVersion).map { v =>
       val m = manifestAt(v)
       // v0 has no predecessor: its "previous generation" is empty, so an
@@ -951,6 +951,13 @@ object WarehouseSink {
     vacuum(dir, keepVersions = (cur.version - oldestKept + 1).toInt)
   }
 
+  /** Drop generations older than the newest `keepVersions`: their
+    * manifest files, and every data file no RETAINED manifest references.
+    * Commits never delete data (truncate only un-references the old
+    * generation), so history stays readable via `versionAsOf` until this
+    * maintenance pass reclaims it — the Delta/Iceberg VACUUM contract.
+    * Single-writer: run it from the table's owning job, not concurrently
+    * with a commit. Returns the number of files removed. */
   def vacuum(dir: String, keepVersions: Int = 1): Int = {
     require(keepVersions >= 1, "must retain at least the live generation")
     val cur = readManifest(dir).getOrElse(return 0)
@@ -1090,43 +1097,29 @@ object WarehouseSink {
     require(rows.columns.toSet == schema.fieldNames.toSet,
       s"branch append schema ${rows.columns.mkString(",")} must match " +
         s"table schema ${schema.fieldNames.mkString(",")}")
-    val fmt = classOf[WarehouseSink].getName
-    val tmp = new File(new File(dir).getAbsoluteFile.getParentFile,
-      new File(dir).getName + ".branch-" +
-        java.util.UUID.randomUUID.toString.take(8))
-    try {
-      val w = rows.select(schema.fieldNames.toIndexedSeq
-          .map(org.apache.spark.sql.functions.col): _*)
-        .write.format(fmt).option("path", tmp.getPath)
-      (if (head.partitionCol.nonEmpty)
-        w.option("partitionBy", head.partitionCol) else w)
-        .mode("overwrite").save()
-      val newFiles = readManifest(tmp.getPath).map(_.files).getOrElse(Nil)
-      newFiles.foreach(moveWithStats(tmp, new File(dir), _))
-      // next free slot above BOTH the main head and every ref head
-      var v = math.max(readManifest(dir).map(_.version).getOrElse(-1L),
-        listRefs(dir).map(_.version).max) + 1
-      var claimed = false
-      while (!claimed) {
-        try {
-          writeManifestFileOnly(dir, Manifest(v, head.schemaDdl,
-            head.files ++ newFiles, epoch.getOrElse(head.epoch),
-            head.partitionCol,
-            sortedBy = "", op = "branch-append", cdf = head.cdf,
-            dvs = head.dvs, ts = System.currentTimeMillis(),
-            colIds = head.colIds, nextColId = head.nextColId))
-          claimed = true
-        } catch {
-          case _: java.nio.file.FileAlreadyExistsException => v += 1
-        }
+    val newFiles = stageWrite(dir,
+      rows.select(schema.fieldNames.toIndexedSeq
+        .map(org.apache.spark.sql.functions.col): _*),
+      options = Map("partitionBy" -> head.partitionCol)
+        .filter(_._2.nonEmpty)).files
+    // next free slot above BOTH the main head and every ref head
+    var v = math.max(readManifest(dir).map(_.version).getOrElse(-1L),
+      listRefs(dir).map(_.version).max) + 1
+    var claimed = false
+    while (!claimed) {
+      try {
+        writeManifestFileOnly(dir, Manifest(v, head.schemaDdl,
+          head.files ++ newFiles, epoch.getOrElse(head.epoch),
+          head.partitionCol,
+          sortedBy = "", op = "branch-append", cdf = head.cdf,
+          dvs = head.dvs, ts = System.currentTimeMillis(),
+          colIds = head.colIds, nextColId = head.nextColId))
+        claimed = true
+      } catch {
+        case _: java.nio.file.FileAlreadyExistsException => v += 1
       }
-      writeRef(dir, r.copy(version = v), overwrite = true)
-    } finally {
-      def rm(f: File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rm)); f.delete()
-      }
-      rm(tmp)
     }
+    writeRef(dir, r.copy(version = v), overwrite = true)
   }
 
   /** Publish a branch head as the MAIN generation — pointer-only (its
@@ -1255,72 +1248,58 @@ object WarehouseSink {
     // generation.
     val compacted = nTarget < filesBefore || cur.dvs.nonEmpty
     if (compacted) {
-      // Stage the compacted layout as its own throwaway warehouse table in
-      // a sibling dir (same volume — the moves below stay atomic renames).
-      val tmp = new File(new File(dir).getAbsoluteFile.getParentFile,
-        new File(dir).getName + ".compact-" +
-          java.util.UUID.randomUUID.toString.take(8))
-      try {
-        // Layout-aware rewrite: a VALUE-PARTITIONED table compacts back
-        // through the partitioned write (one file per value — the layout
-        // SPJ depends on would otherwise be round-robined away); a
-        // clusterBy column range-partitions + sorts the rewrite so the
-        // new files carry disjoint, tight stats ranges (the skip path's
-        // best case); plain tables round-robin to the byte target.
-        val scanned = spark.read.format(fmt).option("path", dir).load()
-        val writer =
-          if (cur.partitionCol.nonEmpty)
-            scanned.write.option("partitionBy", cur.partitionCol)
-              // pin the rewrite's shuffle width: a transform layout would
-              // otherwise fan out to (shuffle partitions × values-per-task)
-              // files, growing the count compaction meant to shrink
-              .option("targetPartitions", nTarget.toString)
-          else (clusterBy, zorderBy) match {
-            case (Some(c), _) =>
-              scanned.repartitionByRange(nTarget,
-                org.apache.spark.sql.functions.col(c))
-                .sortWithinPartitions(c).write
-            case (None, Some((z1, z2))) =>
-              // Z-ORDER rewrite: range-partition + sort by the Morton
-              // key, so every file covers a tight RECTANGLE in (z1, z2)
-              // space and the existing min/max skip path prunes on
-              // EITHER column — the 2-D layout a single-column clusterBy
-              // cannot give (its trailing column's per-file range spans
-              // the whole domain).
-              scanned
-                .withColumn("graft_zk", zorderKey(scanned, z1, z2))
-                .repartitionByRange(nTarget,
-                  org.apache.spark.sql.functions.col("graft_zk"))
-                .sortWithinPartitions("graft_zk")
-                .drop("graft_zk").write
-            case _ => scanned.repartition(nTarget).write
-          }
-        writer.format(fmt).option("path", tmp.getPath)
-          .mode("overwrite").save()
-        val newFiles = readManifest(tmp.getPath).map(_.files).getOrElse(Nil)
-        newFiles.foreach(moveWithStats(tmp, new File(dir), _))
-        publish(dir, { prev =>
-          val p = prev.getOrElse(cur)
-          // Epoch comes from the manifest CURRENT at publish time, not the
-          // snapshot read above — a streaming epoch folded in mid-rewrite
-          // keeps its cursor (its rows, appended after our scan pinned the
-          // file list, are rebased out; hence the single-writer contract).
-          // clusterBy leaves every file internally SORTED by the column —
-          // recorded so the scan can report per-partition ordering; any
-          // later append/DML publish clears the claim (they default "").
-          Some(Manifest(0L, p.schemaDdl, newFiles, p.epoch, p.partitionCol,
-            op = "maintain",
-            sortedBy = if (cur.partitionCol.isEmpty)
-              zorderBy.map { case (a, b) => s"zorder($a,$b)" }
-                .orElse(clusterBy).getOrElse("")
-            else ""))
-        })
-      } finally {
-        def rm(f: File): Unit = {
-          Option(f.listFiles()).foreach(_.foreach(rm)); f.delete()
+      // Layout-aware rewrite: a VALUE-PARTITIONED table compacts back
+      // through the partitioned write (one file per value — the layout
+      // SPJ depends on would otherwise be round-robined away); a
+      // clusterBy column range-partitions + sorts the rewrite so the
+      // new files carry disjoint, tight stats ranges (the skip path's
+      // best case); plain tables round-robin to the byte target.
+      val scanned = spark.read.format(fmt).option("path", dir).load()
+      val rows =
+        if (cur.partitionCol.nonEmpty) scanned
+        else (clusterBy, zorderBy) match {
+          case (Some(c), _) =>
+            scanned.repartitionByRange(nTarget,
+              org.apache.spark.sql.functions.col(c))
+              .sortWithinPartitions(c)
+          case (None, Some((z1, z2))) =>
+            // Z-ORDER rewrite: range-partition + sort by the Morton
+            // key, so every file covers a tight RECTANGLE in (z1, z2)
+            // space and the existing min/max skip path prunes on
+            // EITHER column — the 2-D layout a single-column clusterBy
+            // cannot give (its trailing column's per-file range spans
+            // the whole domain).
+            scanned
+              .withColumn("graft_zk", zorderKey(scanned, z1, z2))
+              .repartitionByRange(nTarget,
+                org.apache.spark.sql.functions.col("graft_zk"))
+              .sortWithinPartitions("graft_zk")
+              .drop("graft_zk")
+          case _ => scanned.repartition(nTarget)
         }
-        rm(tmp)
-      }
+      val newFiles = stageWrite(dir, rows, options =
+        if (cur.partitionCol.isEmpty) Map.empty
+        // pin the rewrite's shuffle width: a transform layout would
+        // otherwise fan out to (shuffle partitions × values-per-task)
+        // files, growing the count compaction meant to shrink
+        else Map("partitionBy" -> cur.partitionCol,
+          "targetPartitions" -> nTarget.toString)).files
+      publish(dir, { prev =>
+        val p = prev.getOrElse(cur)
+        // Epoch comes from the manifest CURRENT at publish time, not the
+        // snapshot read above — a streaming epoch folded in mid-rewrite
+        // keeps its cursor (its rows, appended after our scan pinned the
+        // file list, are rebased out; hence the single-writer contract).
+        // clusterBy leaves every file internally SORTED by the column —
+        // recorded so the scan can report per-partition ordering; any
+        // later append/DML publish clears the claim (they default "").
+        Some(Manifest(0L, p.schemaDdl, newFiles, p.epoch, p.partitionCol,
+          op = "maintain",
+          sortedBy = if (cur.partitionCol.isEmpty)
+            zorderBy.map { case (a, b) => s"zorder($a,$b)" }
+              .orElse(clusterBy).getOrElse("")
+          else ""))
+      })
     }
     val reclaimed = vacuum(dir, keepVersions)
     val after = readManifest(dir).getOrElse(cur)
@@ -1341,29 +1320,14 @@ object WarehouseSink {
   /** Stage `df` as an un-referenced append; returns the audit token. */
   def stageAppend(spark: org.apache.spark.sql.SparkSession, dir: String,
                   df: org.apache.spark.sql.DataFrame): String = {
-    val fmt = classOf[WarehouseSink].getName
-    val tmp = new File(new File(dir).getAbsoluteFile.getParentFile,
-      new File(dir).getName + ".stage-" +
-        java.util.UUID.randomUUID.toString.take(8))
-    try {
-      df.write.format(fmt).option("path", tmp.getPath)
-        .mode("overwrite").save()
-      val m = readManifest(tmp.getPath).getOrElse(
-        throw new IllegalStateException("staged write produced no manifest"))
-      m.files.foreach(moveWithStats(tmp, new File(dir), _))
-      val token = java.util.UUID.randomUUID.toString.take(12)
-      Files.write(Paths.get(dir, s"staged-$token.json"),
-        s"""{"schema": "${escape(m.schemaDdl)}", "files": [${m.files.map(f => "\"" + escape(f) + "\"").mkString(", ")}]}"""
-          .getBytes(StandardCharsets.UTF_8),
-        java.nio.file.StandardOpenOption.CREATE_NEW,
-        java.nio.file.StandardOpenOption.WRITE)
-      token
-    } finally {
-      def rm(f: File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rm)); f.delete()
-      }
-      rm(tmp)
-    }
+    val m = stageWrite(dir, df)
+    val token = java.util.UUID.randomUUID.toString.take(12)
+    Files.write(Paths.get(dir, s"staged-$token.json"),
+      s"""{"schema": "${escape(m.schemaDdl)}", "files": [${m.files.map(f => "\"" + escape(f) + "\"").mkString(", ")}]}"""
+        .getBytes(StandardCharsets.UTF_8),
+      java.nio.file.StandardOpenOption.CREATE_NEW,
+      java.nio.file.StandardOpenOption.WRITE)
+    token
   }
 
   private[sources] def readStagedMeta(dir: String,
@@ -1429,24 +1393,6 @@ object WarehouseSink {
     n
   }
 
-  case class DeleteReport(filesRewritten: Int, filesCarried: Int,
-                          rowsDeleted: Long)
-
-  /** Copy-on-write DELETE WHERE — the Delta/Iceberg row-delete core over
-    * this sink's manifest protocol. The predicate arrives as V1 filters
-    * (the same algebra the skip path tests), so candidate selection is
-    * PLANNING-SHAPED: only files whose stats ranges might hold a matching
-    * row are rewritten; every other file is carried into the new
-    * generation BY NAME, untouched — on a 100 TB table a narrow delete
-    * rewrites a handful of files, not the corpus. The rewrite reads
-    * exactly the candidate files (internal `files` reader option), keeps
-    * rows where the predicate is NOT TRUE (SQL DELETE semantics: a
-    * null-valued predicate keeps the row), stages through a sibling temp
-    * table like OPTIMIZE, and publishes ONE generation with the epoch
-    * cursor carried forward. Crash before publish leaves the live table
-    * untouched; the pre-delete generation remains time-travelable until
-    * vacuumed. Single-writer like vacuum/maintain. Deleted-row count is
-    * metadata-derived: candidate `#rows` minus rewritten `#rows`. */
   /** PARTITION EVOLUTION (Iceberg §partition-evolution): change the
     * table's partition spec WITHOUT rewriting a byte. The new manifest
     * generation carries the same files under the new `partitionCol`;
@@ -1658,64 +1604,356 @@ object WarehouseSink {
     })
   }
 
+  // ---- DML: one skeleton under the eight verbs ----
+  // Every verb is a prologue that picks the candidate files (stats-pruned
+  // by a filter, or by a key bounding box), data legs staged through
+  // [[stageWrite]], and ONE publish of its manifest shape — copy-on-write
+  // (carried + rewritten files) or merge-on-read (every file + appended,
+  // the touched files' deletion vectors replaced) — with the change
+  // feed's images staged first so the same generation references them.
+  // Single-writer, like vacuum/maintain.
+
+  /** Scan `files` of the table at `dir` through the deletion vectors
+    * `dvs` (the reader's internal options); `readDdl` overrides the
+    * relation schema — the change files' CDF columns, or a candidate
+    * scan's (`__graft_file`, `__graft_pos`) row positions. */
+  private def scanFiles(spark: org.apache.spark.sql.SparkSession, dir: String,
+                        files: Seq[String], dvs: Seq[String],
+                        readDdl: Option[String] = None): org.apache.spark.sql.DataFrame = {
+    val r = spark.read.format(classOf[WarehouseSink].getName).option("path", dir)
+    readDdl.fold(r)(r.option("readSchemaDdl", _))
+      .option("files", files.mkString(","))
+      .option("dvs", dvs.mkString(",")).load()
+  }
+
+  /** Σ sidecar `#rows` over `files`, less each file's `dead` count; -1
+    * when any sidecar lacks the count. */
+  private def sidecarRows(dir: String, files: Seq[String],
+                          dead: Map[String, Long] = Map.empty): Long = {
+    val n = files.map(f => readRowCount(dir, f).map(_ - dead.getOrElse(f, 0L)))
+    if (n.exists(_.isEmpty)) -1L else n.flatten.sum
+  }
+
+  /** One DML verb's working set: the live generation `cur`, the
+    * `candidates` it may change and the `carried` rest, which every
+    * publish references by name, untouched. */
+  private final class DmlTarget(spark: org.apache.spark.sql.SparkSession,
+                                dir: String, val cur: Manifest,
+                                val schema: StructType,
+                                val candidates: Seq[String]) {
+    import org.apache.spark.sql.functions.{col, lit}
+    val carried: Seq[String] = cur.files.filterNot(candidates.toSet)
+    // the candidates' vectors: a rewrite reads through them, so rows an
+    // earlier MoR delete killed never resurrect
+    private val candDvs = dvEntriesFor(cur, candidates)
+    private val oldRefs = dvRefs(candDvs).map(r => r.dataFile -> r).toMap
+
+    /** The candidates' live rows; `rowPos` adds the reader's
+      * (`__graft_file`, `__graft_pos`) columns the MoR verbs kill by. */
+    def scan(rowPos: Boolean = false): org.apache.spark.sql.DataFrame =
+      scanFiles(spark, dir, candidates, candDvs,
+        if (!rowPos) None
+        else Some(schema.add("__graft_file", StringType)
+          .add("__graft_pos", LongType).toDDL))
+
+    /** [[scan]], or no rows when nothing is a candidate — an empty
+      * relation built from `like` (any frame holding the table columns),
+      * which the optimizer folds away, where a scan of no files would
+      * still plan its joins. */
+    def scanOr(like: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
+      if (candidates.nonEmpty) scan()
+      else like.filter(lit(false)).select(schema.fieldNames.toIndexedSeq.map(col): _*)
+
+    /** Live candidate rows a rewrite into `kept` dropped, from sidecars
+      * alone (-1 when one lacks `#rows`): live = physical minus each
+      * vector's count, and the rewrite reads through the vectors, so the
+      * kept files hold only previously-live rows. */
+    def dropped(kept: Seq[String]): Long = {
+      val live = sidecarRows(dir, candidates,
+        oldRefs.map { case (f, r) => f -> r.count })
+      val left = sidecarRows(dir, kept)
+      if (live < 0 || left < 0) -1L else live - left
+    }
+
+    /** Mark the `matched` (`__graft_file`, `__graft_pos`) rows dead:
+      * merged per-file vectors write EXECUTOR-SIDE
+      * ([[writeDvsDistributed]]), so only (file, vector, count) refs
+      * are collected — a broad-predicate kill never gathers its
+      * positions in one JVM. */
+    def kill(matched: org.apache.spark.sql.DataFrame): Seq[DvRef] =
+      writeDvsDistributed(dir,
+        matched.select(col("__graft_file"), col("__graft_pos")), oldRefs)
+
+    /** Rows `newRefs` kill beyond the candidates' old vectors. */
+    def killed(newRefs: Seq[DvRef]): Long = newlyKilled(newRefs, oldRefs)
+
+    /** Copy-on-write publish: carried + `rewritten` files, with the
+      * carried files' vectors (the candidates' die with them). */
+    def publishCow(op: String, rewritten: Seq[String],
+                   images: => org.apache.spark.sql.DataFrame): Unit =
+      publishDml(op, images)(p => (carried ++ rewritten, dvEntriesFor(p, carried)))
+
+    /** Merge-on-read publish: every file + `appended`, the touched
+      * files' vectors replaced by `newRefs`. */
+    def publishMor(op: String, appended: Seq[String], newRefs: Seq[DvRef],
+                   images: => org.apache.spark.sql.DataFrame): Unit = {
+      val touched = newRefs.map(_.dataFile).toSet
+      publishDml(op, images)(p => (p.files ++ appended,
+        p.dvs.filterNot(e => touched.contains(e.takeWhile(_ != '|'))) ++
+          newRefs.map(_.encoded)))
+    }
+
+    // CDF capture (opt-in): the verb's change `images` (table columns +
+    // _change_type) stage before the publish that references them, so a
+    // crash leaves only unreferenced files, never a dangling feed entry.
+    private def publishDml(op: String, images: => org.apache.spark.sql.DataFrame)(
+        shape: Manifest => (Seq[String], Seq[String])): Unit = {
+      val cdfOn = cdfEnabled(dir)
+      val changes = if (cdfOn) stageWrite(dir, images).files else Nil
+      publish(dir, { prev =>
+        val p = prev.getOrElse(cur)
+        val (files, dvs) = shape(p)
+        Some(Manifest(0L, p.schemaDdl, files, p.epoch, p.partitionCol,
+          op = op, cdf = cdfOn, changeFiles = changes, dvs = dvs))
+      })
+    }
+  }
+
+  /** The filter verbs' prologue: the live generation's candidates are
+    * the files whose stats ranges might hold a matching row — the filters
+    * are the same algebra the skip path tests, so a refuted file provably
+    * holds none and carries by name. The predicate comes back as a
+    * Column that reads NULL as not-true (SQL DML: a NULL-valued
+    * predicate neither deletes nor updates the row). None when the table
+    * does not exist. */
+  private def filterTarget(spark: org.apache.spark.sql.SparkSession, dir: String,
+                           filters: Seq[org.apache.spark.sql.sources.Filter],
+                           setCols: Iterable[String] = Nil):
+      Option[(DmlTarget, org.apache.spark.sql.Column)] =
+    readManifest(dir).map { cur =>
+      import org.apache.spark.sql.functions.{coalesce, lit}
+      val schema = StructType.fromDDL(cur.schemaDdl)
+      setCols.foreach(k => require(schema.fieldNames.contains(k),
+        s"assigned column $k not in table schema"))
+      val pred = coalesce(
+        filters.map(filterToColumn(_, schema)).reduce(_ && _), lit(false))
+      (new DmlTarget(spark, dir, cur, schema,
+        cur.files.filter(dmlCandidate(dir, _, schema, cur.colIds, filters))), pred)
+    }
+
+  /** The key-matched verbs' prologue ([[merge]], [[mergeMoR]],
+    * [[applyChangesMoR]]): checks `batch` against the live schema (plus
+    * the optional boolean tombstone column), pins it, and returns it
+    * aligned to the table's column order.
+    *
+    * Pinned ONCE: the batch feeds the bounding-box aggregate, the match
+    * join, the staged append and the CDF legs — a nondeterministic plan
+    * (sample, rand, unordered limit) re-evaluated per action could kill
+    * or drop rows it never re-inserts.
+    *
+    * Candidate selection is PLANNING-SHAPED: one small aggregate takes
+    * the batch's [min, max] per key column (2·|keys| collected values,
+    * never the key set), and only files whose stats overlap EVERY key range are
+    * candidates. A key column whose batch values are all NULL (or an
+    * empty batch) matches nothing — SQL join semantics — so then no file
+    * is a candidate. */
+  private def keyedTarget(spark: org.apache.spark.sql.SparkSession, dir: String,
+                          batch: org.apache.spark.sql.DataFrame,
+                          keyCols: Seq[String], deleteCol: Option[String],
+                          verb: String): (DmlTarget, org.apache.spark.sql.DataFrame) = {
+    import org.apache.spark.sql.functions.{col, max, min}
+    import org.apache.spark.sql.sources.{GreaterThanOrEqual, LessThanOrEqual}
+    require(keyCols.nonEmpty, s"$verb requires at least one key column")
+    val cur = readManifest(dir).getOrElse(throw new IllegalArgumentException(
+      s"cannot merge into nonexistent warehouse table at $dir"))
+    val schema = StructType.fromDDL(cur.schemaDdl)
+    keyCols.foreach(k => require(schema.fieldNames.contains(k),
+      s"key column $k not in table schema"))
+    val cols = schema.fieldNames.toIndexedSeq.map(col)
+    val aligned = graft.operators.Materialize.transient(deleteCol match {
+      case None =>
+        require(batch.columns.toSet == schema.fieldNames.toSet,
+          s"updates schema ${batch.columns.mkString(",")} must match table " +
+            s"schema ${schema.fieldNames.mkString(",")}")
+        batch.select(cols: _*)
+      case Some(d) =>
+        require(batch.columns.toSet == schema.fieldNames.toSet + d,
+          s"changes schema ${batch.columns.mkString(",")} must be the table " +
+            s"schema plus the $d flag")
+        batch.select(cols :+ col(d): _*).withColumn(d, col(d).cast("boolean"))
+    })
+    val bounds = keyCols.flatMap(k => Seq(min(col(k)), max(col(k))))
+    val box = aligned.agg(bounds.head, bounds.tail: _*).collect()(0)
+    val ranges = keyCols.zipWithIndex.collect {
+      case (k, i) if !box.isNullAt(2 * i) && !box.isNullAt(2 * i + 1) =>
+        Seq(GreaterThanOrEqual(k, box.get(2 * i)),
+          LessThanOrEqual(k, box.get(2 * i + 1)))
+    }
+    val candidates =
+      if (ranges.size < keyCols.size) Nil
+      else cur.files.filter(
+        dmlCandidate(dir, _, schema, cur.colIds, ranges.flatten))
+    (new DmlTarget(spark, dir, cur, schema, candidates), aligned)
+  }
+
+  private def imaged(rows: org.apache.spark.sql.DataFrame,
+                     changeType: String): org.apache.spark.sql.DataFrame =
+    rows.withColumn("_change_type", org.apache.spark.sql.functions.lit(changeType))
+
+  /** A merge's change images, shared by [[merge]] and the MoR upsert.
+    * `cand` holds the candidate rows — a SUPERSET of the possible
+    * matches (stats pruning is conservative), so keying against it is
+    * exact: its rows whose key `ups` carries are `update_preimage`s,
+    * `ups` rows whose key it holds are `update_postimage`s, the other
+    * `ups` rows `insert`s, and its rows whose key is in `tombstoned`
+    * are `delete`s. */
+  private def mergeImages(cand: org.apache.spark.sql.DataFrame,
+                          ups: org.apache.spark.sql.DataFrame,
+                          keyCols: Seq[String],
+                          tombstoned: Option[org.apache.spark.sql.DataFrame]):
+      org.apache.spark.sql.DataFrame = {
+    import org.apache.spark.sql.functions.col
+    val upKeys = ups.select(keyCols.map(col): _*).distinct()
+    val oldKeys = cand.select(keyCols.map(col): _*).distinct()
+    (tombstoned.map(k => imaged(cand.join(k, keyCols, "left_semi"), "delete")) ++
+      Seq(imaged(cand.join(upKeys, keyCols, "left_semi"), "update_preimage"),
+        imaged(ups.join(oldKeys, keyCols, "left_semi"), "update_postimage"),
+        imaged(ups.join(oldKeys, keyCols, "left_anti"), "insert")))
+      .reduce(_ unionByName _)
+  }
+
+  /** `schema`'s columns with `set`'s assignments applied: expressions
+    * over the row's OLD values (`SET price = price * 2` sees the
+    * pre-update price), cast to the declared type; with a `gate`, a row
+    * it does not hold for keeps its old values. */
+  private def assigned(schema: StructType,
+                       set: Map[String, org.apache.spark.sql.Column],
+                       gate: Option[org.apache.spark.sql.Column] = None):
+      Seq[org.apache.spark.sql.Column] = {
+    import org.apache.spark.sql.functions.{col, when}
+    schema.fields.toIndexedSeq.map { f =>
+      set.get(f.name) match {
+        case Some(e) => gate.fold(e.cast(f.dataType))(p =>
+          when(p, e.cast(f.dataType)).otherwise(col(f.name))).as(f.name)
+        case None => col(f.name)
+      }
+    }
+  }
+
+  case class DeleteReport(filesRewritten: Int, filesCarried: Int,
+                          rowsDeleted: Long)
+
+  /** Copy-on-write DELETE WHERE — the Delta/Iceberg row-delete core over
+    * this sink's manifest protocol. The predicate arrives as V1 filters
+    * (the same algebra the skip path tests), so candidate selection is
+    * PLANNING-SHAPED: only files whose stats ranges might hold a matching
+    * row are rewritten; every other file is carried into the new
+    * generation BY NAME, untouched — on a 100 TB table a narrow delete
+    * rewrites a handful of files, not the corpus. The rewrite reads
+    * exactly the candidate files (internal `files` reader option), keeps
+    * rows where the predicate is NOT TRUE (SQL DELETE semantics: a
+    * null-valued predicate keeps the row), stages through a sibling temp
+    * table like OPTIMIZE, and publishes ONE generation with the epoch
+    * cursor carried forward. Crash before publish leaves the live table
+    * untouched; the pre-delete generation remains time-travelable until
+    * vacuumed. Single-writer like vacuum/maintain. Deleted-row count is
+    * metadata-derived: candidate `#rows` minus rewritten `#rows`. */
   def deleteWhere(spark: org.apache.spark.sql.SparkSession, dir: String,
                   filters: Seq[org.apache.spark.sql.sources.Filter]): DeleteReport = {
     require(filters.nonEmpty, "deleteWhere requires at least one filter")
-    import org.apache.spark.sql.functions.{coalesce, lit}
-    val fmt = classOf[WarehouseSink].getName
-    val cur = readManifest(dir).getOrElse(return DeleteReport(0, 0, 0L))
-    val schema = StructType.fromDDL(cur.schemaDdl)
-    val pred = filters.map(filterToColumn(_, schema)).reduce(_ && _)
-    val (candidates, carried) = cur.files.partition(
-      dmlCandidate(dir, _, schema, cur.colIds, filters))
-    if (candidates.isEmpty) return DeleteReport(0, cur.files.size, 0L)
-    // Live candidate rows = physical minus any deletion vector's count —
-    // the rewrite reads through the vectors, so the kept files hold only
-    // previously-live rows and the metadata-derived delta stays exact.
-    val candDvs = dvEntriesFor(cur, candidates)
-    val dvCountOf = dvRefs(candDvs).map(r => r.dataFile -> r.count).toMap
-    val candRows = candidates.map(f => readRowCount(dir, f)
-      .map(_ - dvCountOf.getOrElse(f, 0L)).getOrElse(-1L))
-    val tmp = new File(new File(dir).getAbsoluteFile.getParentFile,
-      new File(dir).getName + ".delete-" +
-        java.util.UUID.randomUUID.toString.take(8))
-    try {
-      spark.read.format(fmt).option("path", dir)
-        .option("files", candidates.mkString(","))
-        .option("dvs", candDvs.mkString(",")).load()
-        .filter(!coalesce(pred, lit(false)))
-        .write.format(fmt).option("path", tmp.getPath)
-        .mode("overwrite").save()
-      val newFiles = readManifest(tmp.getPath).map(_.files).getOrElse(Nil)
-      newFiles.foreach(moveWithStats(tmp, new File(dir), _))
-      // CDF capture (opt-in): the deleted rows' before-images, staged
-      // before publish and referenced by the same generation — atomic.
-      val cdfOn = cdfEnabled(dir)
-      val changes =
-        if (cdfOn) stageChanges(dir,
-          spark.read.format(fmt).option("path", dir)
-            .option("files", candidates.mkString(","))
-            .option("dvs", candDvs.mkString(",")).load()
-            .filter(coalesce(pred, lit(false)))
-            .withColumn("_change_type", lit("delete")))
-        else Nil
-      publish(dir, { prev =>
-        val p = prev.getOrElse(cur)
-        Some(Manifest(0L, p.schemaDdl, carried ++ newFiles, p.epoch,
-          p.partitionCol, op = "delete", cdf = cdfOn, changeFiles = changes,
-          dvs = dvEntriesFor(p, carried)))
-      })
-      val keptRows = newFiles.map(f => readRowCount(dir, f).getOrElse(-1L))
-      val deleted =
-        if (candRows.contains(-1L) || keptRows.contains(-1L)) -1L
-        else candRows.sum - keptRows.sum
-      DeleteReport(candidates.size, carried.size, deleted)
-    } finally {
-      def rm(f: File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rm)); f.delete()
-      }
-      rm(tmp)
-    }
+    val (t, pred) = filterTarget(spark, dir, filters)
+      .getOrElse(return DeleteReport(0, 0, 0L))
+    if (t.candidates.isEmpty) return DeleteReport(0, t.cur.files.size, 0L)
+    val kept = stageWrite(dir, t.scan().filter(!pred)).files
+    // the deleted rows' before-images
+    t.publishCow("delete", kept, imaged(t.scan().filter(pred), "delete"))
+    DeleteReport(t.candidates.size, t.carried.size, t.dropped(kept))
+  }
+
+  case class UpdateReport(filesRewritten: Int, filesCarried: Int,
+                          rowsUpdated: Long)
+
+  /** Copy-on-write UPDATE WHERE SET — in-place column rewrites for rows
+    * matching a predicate, the third leg of the DML triad. Candidate
+    * files are stats-pruned by the SAME filter algebra as [[deleteWhere]]
+    * (a file refuted by its ranges provably holds no matching row and
+    * carries by name); candidate rows evaluate
+    * `WHEN predicate THEN assignment ELSE old` per assigned column — SQL
+    * UPDATE semantics: a NULL-valued predicate leaves the row unchanged.
+    * Assignments are Column expressions over the row's OLD values
+    * (`SET price = price * 2` sees the pre-update price), cast to the
+    * column's declared type. ONE generation publishes carried + rewritten
+    * with the epoch cursor carried forward. Single-writer. `rowsUpdated`
+    * counts predicate-matching rows via one extra bounded scan of the
+    * candidate files (row counts don't change, so sidecar arithmetic
+    * can't derive it the way DELETE's does). */
+  def updateWhere(spark: org.apache.spark.sql.SparkSession, dir: String,
+                  filters: Seq[org.apache.spark.sql.sources.Filter],
+                  set: Map[String, org.apache.spark.sql.Column]): UpdateReport = {
+    require(filters.nonEmpty, "updateWhere requires at least one filter")
+    require(set.nonEmpty, "updateWhere requires at least one assignment")
+    val (t, pred) = filterTarget(spark, dir, filters, set.keys)
+      .getOrElse(return UpdateReport(0, 0, 0L))
+    if (t.candidates.isEmpty) return UpdateReport(0, t.cur.files.size, 0L)
+    // UPDATE must not write violating rows: the rewrite obeys the CHECKs
+    val rewritten = stageWrite(dir,
+      t.scan().select(assigned(t.schema, set, Some(pred)): _*), checked = true).files
+    // matched rows' before-images plus their post-assignment after-images
+    def matched = t.scan().filter(pred)
+    t.publishCow("update", rewritten,
+      imaged(matched, "update_preimage").unionByName(
+        imaged(matched.select(assigned(t.schema, set): _*), "update_postimage")))
+    UpdateReport(t.candidates.size, t.carried.size, matched.count())
+  }
+
+  case class MergeReport(filesRewritten: Int, filesCarried: Int,
+                         rowsMatched: Long, rowsUpserted: Long)
+
+  /** Copy-on-write MERGE (upsert) — `WHEN MATCHED UPDATE SET * WHEN NOT
+    * MATCHED INSERT *` over this sink's manifest protocol, completing the
+    * DML triad next to [[deleteWhere]] and [[updateWhere]]. Table rows
+    * whose key appears in `updates` are replaced by the update row; keys
+    * absent from the table insert.
+    *
+    * Candidate selection is PLANNING-SHAPED like deleteWhere's: one
+    * distributed aggregate computes the updates' per-key-column [min,max]
+    * (2·|keys| collected values — never the key set itself, which can be
+    * arbitrarily large), and only files whose stats ranges overlap EVERY
+    * key range are rewritten; all others carry by name. On a 100 TB table
+    * a key-local update batch rewrites the overlapping files, not the
+    * corpus — and because the writer range-clusters nothing by itself,
+    * callers who pre-partition by key (repartitionByRange on write) get
+    * the tight file ranges that make this pruning sharp.
+    *
+    * The rewrite reads exactly the candidate files and anti-joins the
+    * (distinct) update keys — matched old versions drop; `updates` itself
+    * appends through a second staged write. ONE generation publishes
+    * carried + rewritten + inserted with the epoch cursor carried
+    * forward; crash before publish leaves the live table untouched.
+    *
+    * Contract: `updates` must be key-unique (two update rows with the
+    * same key both land — MERGE's cardinality rule is the caller's to
+    * enforce); update rows with a NULL key never match (SQL join
+    * semantics) and therefore insert. Single-writer like vacuum/maintain.
+    * `rowsMatched` (old versions replaced) is metadata-derived:
+    * candidate `#rows` minus kept `#rows`. */
+  def merge(spark: org.apache.spark.sql.SparkSession, dir: String,
+            updates: org.apache.spark.sql.DataFrame,
+            keyCols: Seq[String]): MergeReport = {
+    import org.apache.spark.sql.functions.col
+    val (t, aligned) = keyedTarget(spark, dir, updates, keyCols, None, "merge")
+    // both legs carry the CHECK policy: a merge cannot smuggle in
+    // violating rows
+    val kept =
+      if (t.candidates.isEmpty) Nil
+      else stageWrite(dir, t.scan().join(
+        aligned.select(keyCols.map(col): _*).distinct(), keyCols, "left_anti"),
+        checked = true).files
+    val inserted = stageWrite(dir, aligned, checked = true).files
+    t.publishCow("merge", kept ++ inserted,
+      mergeImages(t.scanOr(aligned), aligned, keyCols, None))
+    MergeReport(t.candidates.size, t.carried.size, t.dropped(kept),
+      sidecarRows(dir, inserted))
   }
 
   case class MorDeleteReport(filesWithVectors: Int, filesCarried: Int,
@@ -1756,52 +1994,15 @@ object WarehouseSink {
   def deleteWhereMoR(spark: org.apache.spark.sql.SparkSession, dir: String,
                      filters: Seq[org.apache.spark.sql.sources.Filter]): MorDeleteReport = {
     require(filters.nonEmpty, "deleteWhereMoR requires at least one filter")
-    import org.apache.spark.sql.functions.{coalesce, col, lit, sort_array, collect_list}
-    val fmt = classOf[WarehouseSink].getName
-    val cur = readManifest(dir).getOrElse(return MorDeleteReport(0, 0, 0L))
-    val schema = StructType.fromDDL(cur.schemaDdl)
-    val pred = filters.map(filterToColumn(_, schema)).reduce(_ && _)
-    val (candidates, carried) = cur.files.partition(
-      dmlCandidate(dir, _, schema, cur.colIds, filters))
-    if (candidates.isEmpty) return MorDeleteReport(0, cur.files.size, 0L)
-    val candDvs = dvEntriesFor(cur, candidates)
-    val rowPosDdl = schema
-      .add("__graft_file", org.apache.spark.sql.types.StringType)
-      .add("__graft_pos", org.apache.spark.sql.types.LongType).toDDL
-    def candScan = spark.read.format(fmt).option("path", dir)
-      .option("readSchemaDdl", rowPosDdl)
-      .option("files", candidates.mkString(","))
-      .option("dvs", candDvs.mkString(",")).load()
-    // Merged per-file vectors write EXECUTOR-SIDE ([[writeDvsDistributed]]):
-    // only the (file, vector, count) refs land on the driver, so a
-    // broad-predicate delete never streams positions through driver
-    // memory.
-    val oldRefs = dvRefs(candDvs).map(r => r.dataFile -> r).toMap
-    val newRefs = writeDvsDistributed(dir,
-      candScan.filter(coalesce(pred, lit(false)))
-        .select(col("__graft_file"), col("__graft_pos")), oldRefs)
-    if (newRefs.isEmpty) return MorDeleteReport(0, cur.files.size, 0L)
-    // CDF capture (opt-in): before-images of the dying rows — the same
-    // filtered scan, staged before publish, referenced atomically.
-    val cdfOn = cdfEnabled(dir)
-    val changes =
-      if (cdfOn) stageChanges(dir,
-        spark.read.format(fmt).option("path", dir)
-          .option("files", candidates.mkString(","))
-          .option("dvs", candDvs.mkString(",")).load()
-          .filter(coalesce(pred, lit(false)))
-          .withColumn("_change_type", lit("delete")))
-      else Nil
-    val touched = newRefs.map(_.dataFile).toSet
-    publish(dir, { prev =>
-      val p = prev.getOrElse(cur)
-      Some(Manifest(0L, p.schemaDdl, p.files, p.epoch, p.partitionCol,
-        op = "delete_mor", cdf = cdfOn, changeFiles = changes,
-        dvs = p.dvs.filterNot(e => touched.contains(e.takeWhile(_ != '|'))) ++
-          newRefs.map(_.encoded)))
-    })
-    MorDeleteReport(newRefs.size, cur.files.size - newRefs.size,
-      newlyKilled(newRefs, oldRefs))
+    val (t, pred) = filterTarget(spark, dir, filters)
+      .getOrElse(return MorDeleteReport(0, 0, 0L))
+    if (t.candidates.isEmpty) return MorDeleteReport(0, t.cur.files.size, 0L)
+    val newRefs = t.kill(t.scan(rowPos = true).filter(pred))
+    if (newRefs.isEmpty) return MorDeleteReport(0, t.cur.files.size, 0L)
+    t.publishMor("delete_mor", Nil, newRefs,
+      imaged(t.scan().filter(pred), "delete"))
+    MorDeleteReport(newRefs.size, t.cur.files.size - newRefs.size,
+      t.killed(newRefs))
   }
 
   case class MorUpdateReport(filesWithVectors: Int, filesCarried: Int,
@@ -1835,76 +2036,55 @@ object WarehouseSink {
   def updateWhereMoR(spark: org.apache.spark.sql.SparkSession, dir: String,
                      filters: Seq[org.apache.spark.sql.sources.Filter],
                      set: Map[String, org.apache.spark.sql.Column]): MorUpdateReport = {
-    import org.apache.spark.sql.functions.{coalesce, col, collect_list, lit, sort_array}
     require(filters.nonEmpty, "updateWhereMoR requires at least one filter")
     require(set.nonEmpty, "updateWhereMoR requires at least one assignment")
-    val fmt = classOf[WarehouseSink].getName
-    val cur = readManifest(dir).getOrElse(return MorUpdateReport(0, 0, 0L, 0))
-    val schema = StructType.fromDDL(cur.schemaDdl)
-    set.keys.foreach(k => require(schema.fieldNames.contains(k),
-      s"assigned column $k not in table schema"))
-    val pred = coalesce(
-      filters.map(filterToColumn(_, schema)).reduce(_ && _), lit(false))
-    val (candidates, carried) = cur.files.partition(
-      dmlCandidate(dir, _, schema, cur.colIds, filters))
-    if (candidates.isEmpty) return MorUpdateReport(0, cur.files.size, 0L, 0)
-    val candDvs = dvEntriesFor(cur, candidates)
-    val rowPosDdl = schema
-      .add("__graft_file", org.apache.spark.sql.types.StringType)
-      .add("__graft_pos", org.apache.spark.sql.types.LongType).toDDL
-    def posScan = spark.read.format(fmt).option("path", dir)
-      .option("readSchemaDdl", rowPosDdl)
-      .option("files", candidates.mkString(","))
-      .option("dvs", candDvs.mkString(",")).load()
-    // Vectors write executor-side; only refs reach the driver.
-    val oldRefs = dvRefs(candDvs).map(r => r.dataFile -> r).toMap
-    val newRefs = writeDvsDistributed(dir,
-      posScan.filter(pred)
-        .select(col("__graft_file"), col("__graft_pos")), oldRefs)
-    if (newRefs.isEmpty) return MorUpdateReport(0, cur.files.size, 0L, 0)
-    def candScan = spark.read.format(fmt).option("path", dir)
-      .option("files", candidates.mkString(","))
-      .option("dvs", candDvs.mkString(",")).load()
-    def postImages = candScan.filter(pred).select(schema.fields.map { f =>
-      set.get(f.name) match {
-        case Some(e) => e.cast(f.dataType).as(f.name)
-        case None => col(f.name)
-      }
-    }.toIndexedSeq: _*)
-    val tmp = new File(new File(dir).getAbsoluteFile.getParentFile,
-      new File(dir).getName + ".updmor-" +
-        java.util.UUID.randomUUID.toString.take(8))
-    copyChecks(dir, tmp.getPath) // post-images obey the table's CHECKs
-    try {
-      postImages.write.format(fmt).option("path", tmp.getPath)
-        .mode("overwrite").save()
-      val newFiles = readManifest(tmp.getPath).map(_.files).getOrElse(Nil)
-      newFiles.foreach(moveWithStats(tmp, new File(dir), _))
-      val cdfOn = cdfEnabled(dir)
-      val changes =
-        if (cdfOn) stageChanges(dir,
-          candScan.filter(pred)
-            .withColumn("_change_type", lit("update_preimage"))
-            .unionByName(postImages
-              .withColumn("_change_type", lit("update_postimage"))))
-        else Nil
-      val touched = newRefs.map(_.dataFile).toSet
-      publish(dir, { prev =>
-        val p = prev.getOrElse(cur)
-        Some(Manifest(0L, p.schemaDdl, p.files ++ newFiles, p.epoch,
-          p.partitionCol, op = "update_mor", cdf = cdfOn,
-          changeFiles = changes,
-          dvs = p.dvs.filterNot(e => touched.contains(e.takeWhile(_ != '|'))) ++
-            newRefs.map(_.encoded)))
-      })
-      MorUpdateReport(newRefs.size, cur.files.size - newRefs.size,
-        newlyKilled(newRefs, oldRefs), newFiles.size)
-    } finally {
-      def rm(f: File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rm)); f.delete()
-      }
-      rm(tmp)
-    }
+    val (t, pred) = filterTarget(spark, dir, filters, set.keys)
+      .getOrElse(return MorUpdateReport(0, 0, 0L, 0))
+    if (t.candidates.isEmpty) return MorUpdateReport(0, t.cur.files.size, 0L, 0)
+    val newRefs = t.kill(t.scan(rowPos = true).filter(pred))
+    if (newRefs.isEmpty) return MorUpdateReport(0, t.cur.files.size, 0L, 0)
+    def matched = t.scan().filter(pred)
+    def postImages = matched.select(assigned(t.schema, set): _*)
+    val appended = stageWrite(dir, postImages, checked = true).files
+    t.publishMor("update_mor", appended, newRefs,
+      imaged(matched, "update_preimage").unionByName(
+        imaged(postImages, "update_postimage")))
+    MorUpdateReport(newRefs.size, t.cur.files.size - newRefs.size,
+      t.killed(newRefs), appended.size)
+  }
+
+  /** The merge-on-read upsert under [[mergeMoR]] and [[applyChangesMoR]]
+    * (and, through the latter, [[syncMoR]]): every matched table row —
+    * found by ONE distributed semi-join of the candidates' row positions
+    * (through existing vectors) against the batch's distinct keys — dies
+    * behind a deletion vector written executor-side; the batch's
+    * non-tombstone rows append once through a CHECK-carrying staged
+    * write; one generation publishes. Only with a `deleteCol` does the
+    * tombstone leg run: its matches are counted by a bounded second look
+    * at the candidates and capture as `delete` images. */
+  private def upsertMoR(spark: org.apache.spark.sql.SparkSession, dir: String,
+                        batch: org.apache.spark.sql.DataFrame,
+                        keyCols: Seq[String], deleteCol: Option[String],
+                        verb: String, op: String): MorApplyReport = {
+    import org.apache.spark.sql.functions.col
+    val (t, aligned) = keyedTarget(spark, dir, batch, keyCols, deleteCol, verb)
+    val keys = keyCols.map(col)
+    val tombKeys = deleteCol.map(d =>
+      aligned.filter(col(d)).select(keys: _*).distinct())
+    val ups = deleteCol.fold(aligned)(d => aligned.filter(!col(d))
+      .select(t.schema.fieldNames.toIndexedSeq.map(col): _*))
+    val newRefs =
+      if (t.candidates.isEmpty) Nil
+      else t.kill(t.scan(rowPos = true)
+        .join(aligned.select(keys: _*).distinct(), keyCols, "left_semi"))
+    val rowsDeleted =
+      if (t.candidates.isEmpty) 0L
+      else tombKeys.fold(0L)(k => t.scan().join(k, keyCols, "left_semi").count())
+    val appended = stageWrite(dir, ups, checked = true).files
+    t.publishMor(op, appended, newRefs,
+      mergeImages(t.scanOr(aligned), ups, keyCols, tombKeys))
+    MorApplyReport(newRefs.size, t.cur.files.size - newRefs.size,
+      t.killed(newRefs), rowsDeleted, sidecarRows(dir, appended), appended.size)
   }
 
   case class MorMergeReport(filesWithVectors: Int, filesCarried: Int,
@@ -1927,6 +2107,14 @@ object WarehouseSink {
     * must be key-unique; NULL-keyed update rows never match and insert.
     * `rowsMatched` is exact (the new vector positions). Op `merge_mor`;
     * CDF images match the copy-on-write merge's. Single-writer. */
+  def mergeMoR(spark: org.apache.spark.sql.SparkSession, dir: String,
+               updates: org.apache.spark.sql.DataFrame,
+               keyCols: Seq[String]): MorMergeReport = {
+    val r = upsertMoR(spark, dir, updates, keyCols, None, "mergeMoR", "merge_mor")
+    MorMergeReport(r.filesWithVectors, r.filesCarried, r.rowsKilled,
+      r.rowsUpserted, r.filesAppended)
+  }
+
   case class MorApplyReport(filesWithVectors: Int, filesCarried: Int,
                             rowsKilled: Long, rowsDeleted: Long,
                             rowsUpserted: Long, filesAppended: Int)
@@ -1948,113 +2136,9 @@ object WarehouseSink {
   def applyChangesMoR(spark: org.apache.spark.sql.SparkSession, dir: String,
                       changes: org.apache.spark.sql.DataFrame,
                       keyCols: Seq[String],
-                      deleteCol: String): MorApplyReport = {
-    import org.apache.spark.sql.functions.{col, lit, max, min}
-    import org.apache.spark.sql.sources.{GreaterThanOrEqual, LessThanOrEqual}
-    require(keyCols.nonEmpty, "applyChangesMoR requires at least one key column")
-    val fmt = classOf[WarehouseSink].getName
-    val cur = readManifest(dir).getOrElse(throw new IllegalArgumentException(
-      s"cannot merge into nonexistent warehouse table at $dir"))
-    val schema = StructType.fromDDL(cur.schemaDdl)
-    keyCols.foreach(k => require(schema.fieldNames.contains(k),
-      s"key column $k not in table schema"))
-    require(changes.columns.toSet == schema.fieldNames.toSet + deleteCol,
-      s"changes schema ${changes.columns.mkString(",")} must be the table " +
-        s"schema plus the $deleteCol flag")
-    val aligned = graft.operators.Materialize.transient(
-      changes.select((schema.fieldNames.toIndexedSeq :+ deleteCol).map(col): _*)
-        .withColumn(deleteCol, col(deleteCol).cast("boolean")))
-    val rangeRow = aligned.agg(
-      min(col(keyCols.head)).as("mn0"), (max(col(keyCols.head)).as("mx0") +:
-        keyCols.tail.zipWithIndex.flatMap { case (k, i) =>
-          Seq(min(col(k)).as(s"mn${i + 1}"), max(col(k)).as(s"mx${i + 1}"))
-        }).toIndexedSeq: _*).collect()(0)
-    val rangeFilters = keyCols.indices.flatMap { i =>
-      val (lo, hi) = (rangeRow.get(2 * i), rangeRow.get(2 * i + 1))
-      if (lo != null && hi != null)
-        Seq(GreaterThanOrEqual(keyCols(i), lo),
-          LessThanOrEqual(keyCols(i), hi))
-      else Nil
-    }
-    val candidates =
-      if (rangeFilters.size < 2 * keyCols.size) Nil
-      else cur.files.filter(
-        dmlCandidate(dir, _, schema, cur.colIds, rangeFilters))
-    val candDvs = dvEntriesFor(cur, candidates)
-    val allKeys = aligned.select(keyCols.map(col).toIndexedSeq: _*).distinct()
-    val delKeys = aligned.filter(col(deleteCol))
-      .select(keyCols.map(col).toIndexedSeq: _*).distinct()
-    val ups = aligned.filter(!col(deleteCol))
-      .select(schema.fieldNames.toIndexedSeq.map(col): _*)
-    val rowPosDdl = schema
-      .add("__graft_file", org.apache.spark.sql.types.StringType)
-      .add("__graft_pos", org.apache.spark.sql.types.LongType).toDDL
-    val oldRefs = dvRefs(candDvs).map(r => r.dataFile -> r).toMap
-    def candScan =
-      if (candidates.nonEmpty)
-        spark.read.format(fmt).option("path", dir)
-          .option("files", candidates.mkString(","))
-          .option("dvs", candDvs.mkString(",")).load()
-      else aligned.filter(lit(false))
-        .select(schema.fieldNames.toIndexedSeq.map(col): _*)
-    val newRefs =
-      if (candidates.isEmpty) Nil
-      else writeDvsDistributed(dir,
-        spark.read.format(fmt).option("path", dir)
-          .option("readSchemaDdl", rowPosDdl)
-          .option("files", candidates.mkString(","))
-          .option("dvs", candDvs.mkString(",")).load()
-          .join(allKeys, keyCols, "left_semi")
-          .select(col("__graft_file"), col("__graft_pos")), oldRefs)
-    // tombstone-matched rows: a bounded second look at the candidates
-    val rowsDeleted =
-      if (candidates.isEmpty) 0L
-      else candScan.join(delKeys, keyCols, "left_semi").count()
-    val tmpIns = new File(new File(dir).getAbsoluteFile.getParentFile,
-      new File(dir).getName + ".applymor-" +
-        java.util.UUID.randomUUID.toString.take(8))
-    copyChecks(dir, tmpIns.getPath)
-    try {
-      ups.write.format(fmt).option("path", tmpIns.getPath)
-        .mode("overwrite").save()
-      val insFiles = readManifest(tmpIns.getPath).map(_.files).getOrElse(Nil)
-      insFiles.foreach(moveWithStats(tmpIns, new File(dir), _))
-      val cdfOn = cdfEnabled(dir)
-      val cdfChanges =
-        if (cdfOn) {
-          val upKeys = ups.select(keyCols.map(col).toIndexedSeq: _*).distinct()
-          val oldKeys = candScan.select(keyCols.map(col).toIndexedSeq: _*)
-            .distinct()
-          stageChanges(dir,
-            candScan.join(delKeys, keyCols, "left_semi")
-              .withColumn("_change_type", lit("delete"))
-              .unionByName(candScan.join(upKeys, keyCols, "left_semi")
-                .withColumn("_change_type", lit("update_preimage")))
-              .unionByName(ups.join(oldKeys, keyCols, "left_semi")
-                .withColumn("_change_type", lit("update_postimage")))
-              .unionByName(ups.join(oldKeys, keyCols, "left_anti")
-                .withColumn("_change_type", lit("insert"))))
-        } else Nil
-      val touched = newRefs.map(_.dataFile).toSet
-      publish(dir, { prev =>
-        val p = prev.getOrElse(cur)
-        Some(Manifest(0L, p.schemaDdl, p.files ++ insFiles, p.epoch,
-          p.partitionCol, op = "merge_mor_apply", cdf = cdfOn,
-          changeFiles = cdfChanges,
-          dvs = p.dvs.filterNot(e => touched.contains(e.takeWhile(_ != '|'))) ++
-            newRefs.map(_.encoded)))
-      })
-      val insRows = insFiles.map(f => readRowCount(dir, f).getOrElse(-1L))
-      MorApplyReport(newRefs.size, cur.files.size - newRefs.size,
-        newlyKilled(newRefs, oldRefs), rowsDeleted,
-        if (insRows.contains(-1L)) -1L else insRows.sum, insFiles.size)
-    } finally {
-      def rm(f: File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rm)); f.delete()
-      }
-      rm(tmpIns)
-    }
-  }
+                      deleteCol: String): MorApplyReport =
+    upsertMoR(spark, dir, changes, keyCols, Some(deleteCol), "applyChangesMoR",
+      "merge_mor_apply")
 
   /** Snapshot-sync MERGE — the `WHEN NOT MATCHED BY SOURCE THEN DELETE`
     * clause that completes the merge matrix (Delta/Iceberg's
@@ -2082,7 +2166,6 @@ object WarehouseSink {
               keepWhere: Option[String] = None): MorApplyReport = {
     import org.apache.spark.sql.functions.{col, expr, lit}
     require(keyCols.nonEmpty, "syncMoR requires at least one key column")
-    val fmt = classOf[WarehouseSink].getName
     val cur = readManifest(dir).getOrElse(throw new IllegalArgumentException(
       s"cannot sync into nonexistent warehouse table at $dir"))
     val schema = StructType.fromDDL(cur.schemaDdl)
@@ -2091,346 +2174,14 @@ object WarehouseSink {
         s"schema ${schema.fieldNames.mkString(",")}")
     val cols = schema.fieldNames.toIndexedSeq.map(col)
     val del = "__graft_sync_delete"
-    val live = spark.read.format(fmt).option("path", dir).load()
-    val dying = live
+    val dying = spark.read.format(classOf[WarehouseSink].getName)
+      .option("path", dir).load()
       .join(source.select(keyCols.map(col).toIndexedSeq: _*).distinct(),
         keyCols, "left_anti")
       .filter(keepWhere.map(w => !expr(w)).getOrElse(lit(true)))
     val changes = source.select(cols: _*).withColumn(del, lit(false))
       .unionByName(dying.select(cols: _*).withColumn(del, lit(true)))
     applyChangesMoR(spark, dir, changes, keyCols, del)
-  }
-
-  def mergeMoR(spark: org.apache.spark.sql.SparkSession, dir: String,
-               updates: org.apache.spark.sql.DataFrame,
-               keyCols: Seq[String]): MorMergeReport = {
-    import org.apache.spark.sql.functions.{col, collect_list, lit, max, min, sort_array}
-    import org.apache.spark.sql.sources.{GreaterThanOrEqual, LessThanOrEqual}
-    require(keyCols.nonEmpty, "mergeMoR requires at least one key column")
-    val fmt = classOf[WarehouseSink].getName
-    val cur = readManifest(dir).getOrElse(throw new IllegalArgumentException(
-      s"cannot merge into nonexistent warehouse table at $dir"))
-    val schema = StructType.fromDDL(cur.schemaDdl)
-    keyCols.foreach(k => require(schema.fieldNames.contains(k),
-      s"key column $k not in table schema"))
-    require(updates.columns.toSet == schema.fieldNames.toSet,
-      s"updates schema ${updates.columns.mkString(",")} must match table " +
-        s"schema ${schema.fieldNames.mkString(",")}")
-    // Pinned once: the batch feeds the bounding-box aggregate, the
-    // position semi-join, the append and the CDF legs — all must see
-    // the same rows even for a nondeterministic updates plan.
-    val aligned = graft.operators.Materialize.transient(
-      updates.select(schema.fieldNames.map(col).toIndexedSeq: _*))
-    val rangeRow = aligned.agg(
-      min(col(keyCols.head)).as("mn0"), (max(col(keyCols.head)).as("mx0") +:
-        keyCols.tail.zipWithIndex.flatMap { case (k, i) =>
-          Seq(min(col(k)).as(s"mn${i + 1}"), max(col(k)).as(s"mx${i + 1}"))
-        }).toIndexedSeq: _*).collect()(0)
-    val rangeFilters = keyCols.indices.flatMap { i =>
-      val (lo, hi) = (rangeRow.get(2 * i), rangeRow.get(2 * i + 1))
-      if (lo != null && hi != null)
-        Seq(GreaterThanOrEqual(keyCols(i), lo),
-          LessThanOrEqual(keyCols(i), hi))
-      else Nil
-    }
-    val candidates =
-      if (rangeFilters.size < 2 * keyCols.size) Nil // empty/all-null keys
-      else cur.files.filter(
-        dmlCandidate(dir, _, schema, cur.colIds, rangeFilters))
-    val candDvs = dvEntriesFor(cur, candidates)
-    val updKeys = aligned.select(keyCols.map(col).toIndexedSeq: _*).distinct()
-    val rowPosDdl = schema
-      .add("__graft_file", org.apache.spark.sql.types.StringType)
-      .add("__graft_pos", org.apache.spark.sql.types.LongType).toDDL
-    val oldRefs = dvRefs(candDvs).map(r => r.dataFile -> r).toMap
-    // Vectors write executor-side; only refs reach the driver.
-    val newRefs =
-      if (candidates.isEmpty) Nil
-      else writeDvsDistributed(dir,
-        spark.read.format(fmt).option("path", dir)
-          .option("readSchemaDdl", rowPosDdl)
-          .option("files", candidates.mkString(","))
-          .option("dvs", candDvs.mkString(",")).load()
-          .join(updKeys, keyCols, "left_semi")
-          .select(col("__graft_file"), col("__graft_pos")), oldRefs)
-    val tmpIns = new File(new File(dir).getAbsoluteFile.getParentFile,
-      new File(dir).getName + ".mergemor-" +
-        java.util.UUID.randomUUID.toString.take(8))
-    copyChecks(dir, tmpIns.getPath)
-    try {
-      aligned.write.format(fmt).option("path", tmpIns.getPath)
-        .mode("overwrite").save()
-      val insFiles = readManifest(tmpIns.getPath).map(_.files).getOrElse(Nil)
-      insFiles.foreach(moveWithStats(tmpIns, new File(dir), _))
-      val cdfOn = cdfEnabled(dir)
-      val changes =
-        if (cdfOn) {
-          val candScan =
-            if (candidates.nonEmpty)
-              spark.read.format(fmt).option("path", dir)
-                .option("files", candidates.mkString(","))
-                .option("dvs", candDvs.mkString(",")).load()
-            else aligned.filter(lit(false))
-          val oldKeys = candScan.select(keyCols.map(col).toIndexedSeq: _*)
-            .distinct()
-          stageChanges(dir,
-            candScan.join(updKeys, keyCols, "left_semi")
-              .withColumn("_change_type", lit("update_preimage"))
-              .unionByName(aligned.join(oldKeys, keyCols, "left_semi")
-                .withColumn("_change_type", lit("update_postimage")))
-              .unionByName(aligned.join(oldKeys, keyCols, "left_anti")
-                .withColumn("_change_type", lit("insert"))))
-        } else Nil
-      val touched = newRefs.map(_.dataFile).toSet
-      publish(dir, { prev =>
-        val p = prev.getOrElse(cur)
-        Some(Manifest(0L, p.schemaDdl, p.files ++ insFiles, p.epoch,
-          p.partitionCol, op = "merge_mor", cdf = cdfOn,
-          changeFiles = changes,
-          dvs = p.dvs.filterNot(e => touched.contains(e.takeWhile(_ != '|'))) ++
-            newRefs.map(_.encoded)))
-      })
-      val insRows = insFiles.map(f => readRowCount(dir, f).getOrElse(-1L))
-      MorMergeReport(newRefs.size, cur.files.size - newRefs.size,
-        newlyKilled(newRefs, oldRefs),
-        if (insRows.contains(-1L)) -1L else insRows.sum, insFiles.size)
-    } finally {
-      def rm(f: File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rm)); f.delete()
-      }
-      rm(tmpIns)
-    }
-  }
-
-  case class MergeReport(filesRewritten: Int, filesCarried: Int,
-                         rowsMatched: Long, rowsUpserted: Long)
-
-  /** Copy-on-write MERGE (upsert) — `WHEN MATCHED UPDATE SET * WHEN NOT
-    * MATCHED INSERT *` over this sink's manifest protocol, completing the
-    * DML triad next to [[deleteWhere]] and [[updateWhere]]. Table rows
-    * whose key appears in `updates` are replaced by the update row; keys
-    * absent from the table insert.
-    *
-    * Candidate selection is PLANNING-SHAPED like deleteWhere's: one
-    * distributed aggregate computes the updates' per-key-column [min,max]
-    * (2·|keys| driver values — never the key set itself, which can be
-    * arbitrarily large), and only files whose stats ranges overlap EVERY
-    * key range are rewritten; all others carry by name. On a 100 TB table
-    * a key-local update batch rewrites the overlapping files, not the
-    * corpus — and because the writer range-clusters nothing by itself,
-    * callers who pre-partition by key (repartitionByRange on write) get
-    * the tight file ranges that make this pruning sharp.
-    *
-    * The rewrite reads exactly the candidate files and anti-joins the
-    * (distinct) update keys — matched old versions drop; `updates` itself
-    * appends through a second staged write. ONE generation publishes
-    * carried + rewritten + inserted with the epoch cursor carried
-    * forward; crash before publish leaves the live table untouched.
-    *
-    * Contract: `updates` must be key-unique (two update rows with the
-    * same key both land — MERGE's cardinality rule is the caller's to
-    * enforce); update rows with a NULL key never match (SQL join
-    * semantics) and therefore insert. Single-writer like vacuum/maintain.
-    * `rowsMatched` (old versions replaced) is metadata-derived:
-    * candidate `#rows` minus kept `#rows`. */
-  def merge(spark: org.apache.spark.sql.SparkSession, dir: String,
-            updates: org.apache.spark.sql.DataFrame,
-            keyCols: Seq[String]): MergeReport = {
-    import org.apache.spark.sql.functions.{col, max, min}
-    import org.apache.spark.sql.sources.{GreaterThanOrEqual, LessThanOrEqual}
-    require(keyCols.nonEmpty, "merge requires at least one key column")
-    val fmt = classOf[WarehouseSink].getName
-    val cur = readManifest(dir).getOrElse(throw new IllegalArgumentException(
-      s"cannot merge into nonexistent warehouse table at $dir"))
-    val schema = StructType.fromDDL(cur.schemaDdl)
-    keyCols.foreach(k => require(schema.fieldNames.contains(k),
-      s"key column $k not in table schema"))
-    require(updates.columns.toSet == schema.fieldNames.toSet,
-      s"updates schema ${updates.columns.mkString(",")} must match table " +
-        s"schema ${schema.fieldNames.mkString(",")}")
-    // Materialized ONCE: the plan feeds three separate actions (the key
-    // bounding-box aggregate, the anti-join key set, the insert write) —
-    // a nondeterministic updates plan (sample, rand, unordered limit)
-    // re-evaluated per action could anti-join-delete rows it never
-    // re-inserts. Pinning the batch makes all three see the same rows.
-    val aligned = graft.operators.Materialize.transient(
-      updates.select(schema.fieldNames.map(col).toIndexedSeq: _*))
-    // One small aggregate: the updates' bounding box over the key columns.
-    val rangeRow = aligned.agg(
-      min(col(keyCols.head)).as("mn0"), (max(col(keyCols.head)).as("mx0") +:
-        keyCols.tail.zipWithIndex.flatMap { case (k, i) =>
-          Seq(min(col(k)).as(s"mn${i + 1}"), max(col(k)).as(s"mx${i + 1}"))
-        }).toIndexedSeq: _*).collect()(0)
-    val keyRanges = keyCols.indices.map { i =>
-      (keyCols(i), rangeRow.get(2 * i), rangeRow.get(2 * i + 1))
-    }
-    // All-null key ranges (empty or all-null updates): nothing can match.
-    val rangeFilters = keyRanges.collect {
-      case (k, lo, hi) if lo != null && hi != null =>
-        Seq(GreaterThanOrEqual(k, lo), LessThanOrEqual(k, hi))
-    }.flatten
-    val (candidates, carried) =
-      if (rangeFilters.isEmpty) (Nil, cur.files)
-      else cur.files.partition(
-        dmlCandidate(dir, _, schema, cur.colIds, rangeFilters))
-    val candDvs = dvEntriesFor(cur, candidates)
-    val dvCountOf = dvRefs(candDvs).map(r => r.dataFile -> r.count).toMap
-    val candRows = candidates.map(f => readRowCount(dir, f)
-      .map(_ - dvCountOf.getOrElse(f, 0L)).getOrElse(-1L))
-    val tmpKept = new File(new File(dir).getAbsoluteFile.getParentFile,
-      new File(dir).getName + ".merge-" +
-        java.util.UUID.randomUUID.toString.take(8))
-    val tmpIns = new File(tmpKept.getPath + "-ins")
-    // DML rewrite legs write through TEMP tables: carry the parent's
-    // CHECK policy so a merge cannot smuggle in violating rows.
-    copyChecks(dir, tmpKept.getPath)
-    copyChecks(dir, tmpIns.getPath)
-    try {
-      if (candidates.nonEmpty)
-        spark.read.format(fmt).option("path", dir)
-          .option("files", candidates.mkString(","))
-          .option("dvs", candDvs.mkString(",")).load()
-          .join(aligned.select(keyCols.map(col).toIndexedSeq: _*).distinct(),
-            keyCols, "left_anti")
-          .write.format(fmt).option("path", tmpKept.getPath)
-          .mode("overwrite").save()
-      aligned.write.format(fmt).option("path", tmpIns.getPath)
-        .mode("overwrite").save()
-      val keptFiles = readManifest(tmpKept.getPath).map(_.files).getOrElse(Nil)
-      val insFiles = readManifest(tmpIns.getPath).map(_.files).getOrElse(Nil)
-      keptFiles.foreach(moveWithStats(tmpKept, new File(dir), _))
-      insFiles.foreach(moveWithStats(tmpIns, new File(dir), _))
-      // CDF capture (opt-in): matched old versions are update_preimages,
-      // their replacements update_postimages, unmatched updates inserts.
-      // Candidate files are a SUPERSET of possible matches (stats pruning
-      // is conservative), so keying against the candidate scan is exact.
-      val cdfOn = cdfEnabled(dir)
-      val changes =
-        if (cdfOn) {
-          val candScan =
-            if (candidates.nonEmpty)
-              spark.read.format(fmt).option("path", dir)
-                .option("files", candidates.mkString(","))
-                .option("dvs", candDvs.mkString(",")).load()
-            else aligned.filter(org.apache.spark.sql.functions.lit(false))
-          val updKeys = aligned.select(keyCols.map(col).toIndexedSeq: _*)
-            .distinct()
-          val oldKeys = candScan.select(keyCols.map(col).toIndexedSeq: _*)
-            .distinct()
-          import org.apache.spark.sql.functions.lit
-          stageChanges(dir,
-            candScan.join(updKeys, keyCols, "left_semi")
-              .withColumn("_change_type", lit("update_preimage"))
-              .unionByName(aligned.join(oldKeys, keyCols, "left_semi")
-                .withColumn("_change_type", lit("update_postimage")))
-              .unionByName(aligned.join(oldKeys, keyCols, "left_anti")
-                .withColumn("_change_type", lit("insert"))))
-        } else Nil
-      publish(dir, { prev =>
-        val p = prev.getOrElse(cur)
-        Some(Manifest(0L, p.schemaDdl, carried ++ keptFiles ++ insFiles,
-          p.epoch, p.partitionCol, op = "merge", cdf = cdfOn,
-          changeFiles = changes, dvs = dvEntriesFor(p, carried)))
-      })
-      val keptRows = keptFiles.map(f => readRowCount(dir, f).getOrElse(-1L))
-      val insRows = insFiles.map(f => readRowCount(dir, f).getOrElse(-1L))
-      val matched =
-        if (candRows.contains(-1L) || keptRows.contains(-1L)) -1L
-        else candRows.sum - keptRows.sum
-      MergeReport(candidates.size, carried.size, matched,
-        if (insRows.contains(-1L)) -1L else insRows.sum)
-    } finally {
-      def rm(f: File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rm)); f.delete()
-      }
-      rm(tmpKept); rm(tmpIns)
-    }
-  }
-
-  case class UpdateReport(filesRewritten: Int, filesCarried: Int,
-                          rowsUpdated: Long)
-
-  /** Copy-on-write UPDATE WHERE SET — in-place column rewrites for rows
-    * matching a predicate, the third leg of the DML triad. Candidate
-    * files are stats-pruned by the SAME filter algebra as [[deleteWhere]]
-    * (a file refuted by its ranges provably holds no matching row and
-    * carries by name); candidate rows evaluate
-    * `WHEN predicate THEN assignment ELSE old` per assigned column — SQL
-    * UPDATE semantics: a NULL-valued predicate leaves the row unchanged.
-    * Assignments are Column expressions over the row's OLD values
-    * (`SET price = price * 2` sees the pre-update price), cast to the
-    * column's declared type. ONE generation publishes carried + rewritten
-    * with the epoch cursor carried forward. Single-writer. `rowsUpdated`
-    * counts predicate-matching rows via one extra bounded scan of the
-    * candidate files (row counts don't change, so sidecar arithmetic
-    * can't derive it the way DELETE's does). */
-  def updateWhere(spark: org.apache.spark.sql.SparkSession, dir: String,
-                  filters: Seq[org.apache.spark.sql.sources.Filter],
-                  set: Map[String, org.apache.spark.sql.Column]): UpdateReport = {
-    import org.apache.spark.sql.functions.{coalesce, col, lit, when}
-    require(filters.nonEmpty, "updateWhere requires at least one filter")
-    require(set.nonEmpty, "updateWhere requires at least one assignment")
-    val fmt = classOf[WarehouseSink].getName
-    val cur = readManifest(dir).getOrElse(return UpdateReport(0, 0, 0L))
-    val schema = StructType.fromDDL(cur.schemaDdl)
-    set.keys.foreach(k => require(schema.fieldNames.contains(k),
-      s"assigned column $k not in table schema"))
-    val pred = coalesce(
-      filters.map(filterToColumn(_, schema)).reduce(_ && _), lit(false))
-    val (candidates, carried) = cur.files.partition(
-      dmlCandidate(dir, _, schema, cur.colIds, filters))
-    if (candidates.isEmpty) return UpdateReport(0, cur.files.size, 0L)
-    val candDvs = dvEntriesFor(cur, candidates)
-    def candScan = spark.read.format(fmt).option("path", dir)
-      .option("files", candidates.mkString(","))
-      .option("dvs", candDvs.mkString(",")).load()
-    val tmp = new File(new File(dir).getAbsoluteFile.getParentFile,
-      new File(dir).getName + ".update-" +
-        java.util.UUID.randomUUID.toString.take(8))
-    copyChecks(dir, tmp.getPath) // UPDATE must not write violating rows
-    try {
-      val rewritten = candScan.select(schema.fields.map { f =>
-        set.get(f.name) match {
-          case Some(e) => when(pred, e.cast(f.dataType))
-            .otherwise(col(f.name)).as(f.name)
-          case None => col(f.name)
-        }
-      }.toIndexedSeq: _*)
-      rewritten.write.format(fmt).option("path", tmp.getPath)
-        .mode("overwrite").save()
-      val newFiles = readManifest(tmp.getPath).map(_.files).getOrElse(Nil)
-      newFiles.foreach(moveWithStats(tmp, new File(dir), _))
-      // CDF capture (opt-in): matched rows' before-images plus their
-      // post-assignment after-images, one staged write, same generation.
-      val cdfOn = cdfEnabled(dir)
-      val changes =
-        if (cdfOn) {
-          val matched = candScan.filter(coalesce(pred, lit(false)))
-          val post = matched.select(schema.fields.map { f =>
-            set.get(f.name) match {
-              case Some(e) => e.cast(f.dataType).as(f.name)
-              case None => col(f.name)
-            }
-          }.toIndexedSeq: _*)
-          stageChanges(dir,
-            matched.withColumn("_change_type", lit("update_preimage"))
-              .unionByName(
-                post.withColumn("_change_type", lit("update_postimage"))))
-        } else Nil
-      publish(dir, { prev =>
-        val p = prev.getOrElse(cur)
-        Some(Manifest(0L, p.schemaDdl, carried ++ newFiles, p.epoch,
-          p.partitionCol, op = "update", cdf = cdfOn, changeFiles = changes,
-          dvs = dvEntriesFor(p, carried)))
-      })
-      val updated = candScan.filter(pred).count()
-      UpdateReport(candidates.size, carried.size, updated)
-    } finally {
-      def rm(f: File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rm)); f.delete()
-      }
-      rm(tmp)
-    }
   }
 
   /** The V1-filter subset the skip path understands, rebuilt as a Column
@@ -3294,17 +3045,12 @@ private[sources] class ReplaceGroupsBatchWrite(dir: String,
         // scanned files' vectors die with them; others ride along
         dvs = p.dvs.filterNot(e => dead.contains(e.takeWhile(_ != '|')))))
     })
-    deleteRecursively(staging)
+    WarehouseSink.deleteRecursively(staging)
     // replaced files stay on disk for time travel until vacuum()
   }
 
   override def abort(messages: Array[WriterCommitMessage]): Unit =
-    deleteRecursively(staging)
-
-  private def deleteRecursively(f: File): Unit = {
-    Option(f.listFiles()).foreach(_.foreach(deleteRecursively))
-    f.delete()
-  }
+    WarehouseSink.deleteRecursively(staging)
 }
 
 /** Filter pushdown for FILE SKIPPING only: every filter is returned as a
@@ -3691,18 +3437,13 @@ private[sources] class WarehouseBatchWrite(dir: String, schema: StructType,
         new File(dir, f).delete()
         new File(dir, WarehouseSink.statsFile(f)).delete()
       }
-    deleteRecursively(staging)
+    WarehouseSink.deleteRecursively(staging)
     // Truncate only UN-REFERENCES the old generation — its files stay on
     // disk so versionAsOf reads keep working until vacuum() reclaims them.
   }
 
   override def abort(messages: Array[WriterCommitMessage]): Unit =
-    deleteRecursively(staging) // manifest untouched: table state unchanged
-
-  private def deleteRecursively(f: File): Unit = {
-    Option(f.listFiles()).foreach(_.foreach(deleteRecursively))
-    f.delete()
-  }
+    WarehouseSink.deleteRecursively(staging) // manifest untouched: table state unchanged
 }
 
 /** Exactly-once streaming sink: each micro-batch publishes through the same
@@ -3730,7 +3471,7 @@ private[sources] class WarehouseStreamingWrite(dir: String, schema: StructType,
   override def commit(epochId: Long, messages: Array[WriterCommitMessage]): Unit = {
     if (WarehouseSink.readManifest(dir).exists(_.epoch >= epochId)) {
       // replayed micro-batch: already folded into a committed generation
-      deleteRecursively(staging(epochId))
+      WarehouseSink.deleteRecursively(staging(epochId))
       return
     }
     val st = staging(epochId)
@@ -3772,16 +3513,11 @@ private[sources] class WarehouseStreamingWrite(dir: String, schema: StructType,
         new File(dir, f).delete()
         new File(dir, WarehouseSink.statsFile(f)).delete()
       }
-    deleteRecursively(st)
+    WarehouseSink.deleteRecursively(st)
   }
 
   override def abort(epochId: Long, messages: Array[WriterCommitMessage]): Unit =
-    deleteRecursively(staging(epochId))
-
-  private def deleteRecursively(f: File): Unit = {
-    Option(f.listFiles()).foreach(_.foreach(deleteRecursively))
-    f.delete()
-  }
+    WarehouseSink.deleteRecursively(staging(epochId))
 }
 
 private[sources] class WarehouseStreamingWriterFactory(baseStaging: String,

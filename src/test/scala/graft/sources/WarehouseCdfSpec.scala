@@ -268,4 +268,30 @@ class WarehouseCdfSpec extends SparkSpec {
     assert(WarehouseSink.history(spark, dir).select("version")
       .as[Long].collect().toSeq === Seq(3L, 2L))
   }
+
+  test("copy-on-write and merge-on-read merges emit the same change feed") {
+    def table(): String = {
+      val dir = tmp()
+      WarehouseSink.enableChangeFeed(dir)
+      (1L to 30L).map(i => (i, s"r$i")).toDF("id", "s")
+        .repartitionByRange(3, col("id"))
+        .write.format(Fmt).option("path", dir).mode("append").save() // v0
+      dir
+    }
+    // matched keys in two files, a NULL key and two fresh keys
+    val updates = Seq((Option(4L), "m4"), (Option(5L), "m5"),
+      (Option(22L), "m22"), (Option.empty[Long], "mnull"),
+      (Option(40L), "m40"), (Option(41L), "m41")).toDF("id", "s")
+    val (cow, mor) = (table(), table())
+    WarehouseSink.merge(spark, cow, updates, Seq("id")) // v1
+    WarehouseSink.mergeMoR(spark, mor, updates, Seq("id")) // v1
+    def feed(dir: String) = WarehouseSink.tableChanges(spark, dir, 0, 1)
+      .select(col("_commit_version"), col("_change_type"), col("id"), col("s"))
+      .as[(Long, String, Option[Long], String)].collect().toSeq
+      .sortBy(r => (r._2, r._3.getOrElse(-1L), r._4))
+    assert(feed(cow) === feed(mor))
+    assert(feed(cow).map(_._2).groupBy(identity).map { case (k, v) =>
+      k -> v.size } === Map("update_preimage" -> 3, "update_postimage" -> 3,
+        "insert" -> 3))
+  }
 }

@@ -1415,4 +1415,68 @@ class WarehouseSinkSpec extends SparkSpec {
       .option("versionAsOf", "0").load()
       .select("id").as[Long].collect().sorted.toSeq === (0L until 10L))
   }
+
+  test("each DML verb launches a pinned number of Spark jobs, feed off and on") {
+    import org.apache.spark.sql.sources.{GreaterThanOrEqual, LessThan}
+    val band = Seq(GreaterThanOrEqual("id", 10L), LessThan("id", 15L))
+    val updates = ((10L until 15L).map(i => (i, 777L)) ++
+      Seq((100L, 1L), (101L, 2L))).toDF("id", "v")
+    val changes = Seq((10L, 7L, false), (11L, 7L, false), (13L, 0L, true),
+      (100L, 1L, false)).toDF("id", "v", "del")
+    val source = ((0L until 36L).map(i => (i, i % 10)) :+ ((100L, 1L)))
+      .toDF("id", "v")
+    val verbs: Seq[(String, String => Unit)] = Seq(
+      "deleteWhere" -> (d => WarehouseSink.deleteWhere(spark, d, band)),
+      "updateWhere" -> (d => WarehouseSink.updateWhere(spark, d, band,
+        Map("v" -> (col("v") + 100L)))),
+      "merge" -> (d => WarehouseSink.merge(spark, d, updates, Seq("id"))),
+      "deleteWhereMoR" -> (d => WarehouseSink.deleteWhereMoR(spark, d, band)),
+      "updateWhereMoR" -> (d => WarehouseSink.updateWhereMoR(spark, d, band,
+        Map("v" -> (col("v") + 100L)))),
+      "mergeMoR" -> (d => WarehouseSink.mergeMoR(spark, d, updates, Seq("id"))),
+      "applyChangesMoR" -> (d => WarehouseSink.applyChangesMoR(spark, d,
+        changes, Seq("id"), "del")),
+      "syncMoR" -> (d => WarehouseSink.syncMoR(spark, d, source, Seq("id"))))
+    val got = for ((name, run) <- verbs; cdf <- Seq(false, true)) yield {
+      val dir = tmp()
+      spark.range(0, 40).toDF("id")
+        .withColumn("v", col("id") % 10)
+        .repartitionByRange(4, col("id"))
+        .write.format(Fmt).option("path", dir).mode("append").save()
+      if (cdf) WarehouseSink.enableChangeFeed(dir)
+      s"$name${if (cdf) "+cdf" else ""}" -> jobsLaunched(run(dir))
+    }
+    // A change to the shared DML skeleton must not add a job to any verb.
+    assert(got.toMap === Map(
+      "deleteWhere" -> 1, "deleteWhere+cdf" -> 2,
+      "updateWhere" -> 3, "updateWhere+cdf" -> 4,
+      "merge" -> 7, "merge+cdf" -> 14,
+      "deleteWhereMoR" -> 2, "deleteWhereMoR+cdf" -> 3,
+      "updateWhereMoR" -> 3, "updateWhereMoR+cdf" -> 4,
+      "mergeMoR" -> 8, "mergeMoR+cdf" -> 15,
+      "applyChangesMoR" -> 12, "applyChangesMoR+cdf" -> 21,
+      "syncMoR" -> 14, "syncMoR+cdf" -> 23), got.mkString(", "))
+  }
+
+  test("merge prunes by every key column: a NULL-only key column matches nothing") {
+    val dir = tmp()
+    spark.range(0, 40).toDF("a")
+      .withColumn("b", col("a") % 4)
+      .withColumn("v", lit("old"))
+      .repartitionByRange(4, col("a"))
+      .write.format(Fmt).option("path", dir).mode("append").save()
+    // the updates' `a` range overlaps the table, but every `b` is NULL:
+    // no row can match on (a, b), so no file may be rewritten
+    val updates = Seq((5L, Option.empty[Long], "new"),
+      (25L, Option.empty[Long], "new")).toDF("a", "b", "v")
+    val rep = WarehouseSink.merge(spark, dir, updates, Seq("a", "b"))
+    assert(rep.filesRewritten === 0, rep.toString)
+    assert(rep.rowsMatched === 0L && rep.rowsUpserted === 2L, rep.toString)
+    val back = spark.read.format(Fmt).option("path", dir).load()
+      .as[(Long, Option[Long], String)].collect().toSeq
+    val want = (0L until 40L).map(a => (a, Option(a % 4), "old")) ++
+      Seq((5L, None, "new"), (25L, None, "new"))
+    assert(back.sortBy(r => (r._1, r._2.getOrElse(-1L), r._3)) ===
+      want.sortBy(r => (r._1, r._2.getOrElse(-1L), r._3)))
+  }
 }
