@@ -4,17 +4,24 @@ import graft.functions.{BpeTokens, DamerauLevenshtein, DotProduct, JaroWinkler, 
 import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.catalyst.rules.Rule
 
-/** Session extension wiring for graft's native expressions.
+/** Session extension wiring for graft's native expressions and optimizer
+  * rules.
   *
   * Cluster use: `--conf spark.sql.extensions=graft.GraftExtensions` makes
-  * `graft_dot(a, b)` available to every SQL/DataFrame session. For an
+  * `graft_dot(a, b)` available to every SQL/DataFrame session and adds
+  * [[FooterAggregate]] and [[OneRowJoin]] to its optimizer. For an
   * already-running session, [[GraftExtensions.register]] installs the same
-  * functions into the session's function registry.
+  * functions into the session's function registry and the same rules into
+  * its `experimental.extraOptimizations`.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit =
+  override def apply(ext: SparkSessionExtensions): Unit = {
     GraftExtensions.functions.foreach(ext.injectFunction)
+    GraftExtensions.rules.foreach(r => ext.injectOptimizerRule(_ => r))
+  }
 }
 
 object GraftExtensions {
@@ -84,9 +91,14 @@ object GraftExtensions {
         JaroWinkler(children.head, children(1))
       }))
 
+  private val rules: Seq[Rule[LogicalPlan]] = Seq(FooterAggregate, OneRowJoin)
+
   /** Runtime registration into an existing session. */
-  def register(spark: SparkSession): Unit = functions.foreach {
-    case (ident, info, builder) =>
+  def register(spark: SparkSession): Unit = {
+    functions.foreach { case (ident, info, builder) =>
       spark.sessionState.functionRegistry.registerFunction(ident, info, builder)
+    }
+    val extra = spark.experimental.extraOptimizations
+    spark.experimental.extraOptimizations = extra ++ rules.filterNot(extra.contains)
   }
 }

@@ -273,7 +273,7 @@ object SparkEntry
     * and models become collectable — Verify, Bench and ProfileQ call
     * this once their query sweep is done. */
   def releaseCaches(): Unit = {
-    Tables.clearSchemas()
+    Tables.clearCaches()
     spanCache.clear()
     bloomStoreCache.clear()
     zoneStoreCache.clear()

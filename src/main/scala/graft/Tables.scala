@@ -39,7 +39,7 @@ object Tables {
     *
     * A change nested below a directory that leaves the directory's own
     * status alone (a file swapped inside a partition subdirectory) is not
-    * seen until [[clearSchemas]]. Paths that do not resolve to one status
+    * seen until [[clearCaches]]. Paths that do not resolve to one status
     * (missing paths, globs) take the plain read and its errors. */
   def parquet(spark: SparkSession, path: String): DataFrame = {
     val p = new org.apache.hadoop.fs.Path(path)
@@ -56,7 +56,21 @@ object Tables {
     }
   }
 
-  private[graft] def clearSchemas(): Unit = schemas.clear()
+  /** Footers by file version (qualified path, modification time, length),
+    * read by [[FooterAggregate]] and [[events]]: a row count and, per
+    * top-level column, its types and integer range. */
+  private val footers =
+    scala.collection.concurrent.TrieMap.empty[(String, Long, Long), Footer]
+
+  private[graft] def footer(st: org.apache.hadoop.fs.FileStatus,
+                            conf: => org.apache.hadoop.conf.Configuration): Footer =
+    footers.getOrElseUpdate((st.getPath.toString, st.getModificationTime, st.getLen),
+      Footer.read(conf, st))
+
+  private[graft] def cachedFooters: Int = footers.size
+
+  /** Drop the kept schemas and footers. */
+  private[graft] def clearCaches(): Unit = { schemas.clear(); footers.clear() }
 
   /** OPT-IN guard against single-task map stages on low-split inputs
     * (spark_optimization_guide §2.5, "input skew: one huge unsplittable
@@ -99,23 +113,58 @@ object Tables {
   private[graft] def spreadBy(df: DataFrame,
                               keys: Seq[org.apache.spark.sql.Column]): DataFrame = {
     val cores = df.sparkSession.sparkContext.defaultParallelism
-    // Partition-count probe WITHOUT df.rdd: under AQE, .rdd finalizes the
-    // adaptive plan, which EXECUTES every upstream shuffle stage eagerly
-    // and throws that work away when the frame is re-planned downstream.
-    // On a join-free plan, sparkPlan.execute() builds the non-adaptive
-    // physical RDD lazily — partition arithmetic only, no job — although
-    // the plan is unprepared (no exchanges inserted). A join cannot run
-    // unprepared: a broadcast join asks its build side for a broadcast
-    // that only the missing exchange gives ("HashAggregate does not
-    // implement doExecuteBroadcast"). A joined frame is therefore kept as
-    // it is, unprobed: a shuffled join already runs at the shuffle
-    // partition count, and a broadcast join keeps its stream side's
-    // partitioning until the next keyed exchange.
+    // The partition count is read off the planned (unprepared) plan's
+    // leaves, never by executing it: under AQE even `.rdd` runs every
+    // upstream shuffle stage. A joined frame is kept as it is, unprobed: a
+    // shuffled join already runs at the shuffle partition count, and a
+    // broadcast join keeps its stream side's partitioning until the next
+    // keyed exchange. So is a frame whose count needs a run to know.
     val plan = df.queryExecution.sparkPlan
     val joined = plan.exists(p => p.children.length > 1 &&
       !p.isInstanceOf[org.apache.spark.sql.execution.UnionExec])
-    if (joined || plan.execute().getNumPartitions >= cores) df
+    if (joined || splitCount(plan, df.sparkSession).forall(_ >= cores)) df
     else df.repartition(cores, keys: _*)
+  }
+
+  /** The partitions `plan` runs at, as Spark computes them when it builds
+    * the plan's RDD: file scans by `FilePartition` arithmetic over the
+    * listed files, RDD scans by their RDD, local rows, ranges, explicit
+    * repartitions, coalesces and unions by their own rules. None when a
+    * leaf's count is only known by running it (an unfilled cache). */
+  private def splitCount(plan: org.apache.spark.sql.execution.SparkPlan,
+                         spark: SparkSession): Option[Int] = {
+    import org.apache.spark.sql.execution._
+    import org.apache.spark.sql.execution.datasources.FilePartition
+    plan match {
+      case s: FileSourceScanExec if !s.bucketedScan =>
+        val session = s.relation.sparkSession
+        val maxSplit = FilePartition.maxSplitBytes(session, s.selectedPartitions)
+        val splits = s.selectedPartitions.filePartitionIterator.flatMap { p =>
+          p.files.flatMap { f =>
+            PartitionedFileUtil.splitFiles(f, f.getPath, s.relation.fileFormat
+              .isSplitable(session, s.relation.options, f.getPath), maxSplit, p.values)
+          }
+        }.toSeq.sortBy(-_.length)
+        Some(FilePartition.getFilePartitions(session, splits, maxSplit).size)
+      case r: RDDScanExec => Some(r.rdd.getNumPartitions)
+      case l: LocalTableScanExec =>
+        Some(if (l.rows.isEmpty) 0 else math.min(l.rows.size,
+          spark.conf.getOption("spark.sql.leafNodeDefaultParallelism")
+            .fold(spark.sparkContext.defaultParallelism)(_.toInt)))
+      case r: RangeExec => Some(if (r.isEmptyRange) 0 else r.numSlices)
+      case m: columnar.InMemoryTableScanExec =>
+        val cache = m.relation.cacheBuilder
+        if (cache.isCachedColumnBuffersLoaded) Some(cache.cachedColumnBuffers.getNumPartitions)
+        else None
+      case e: exchange.ShuffleExchangeExec => Some(e.outputPartitioning.numPartitions)
+      case c: CoalesceExec => splitCount(c.child, spark).map(n =>
+        if (c.numPartitions == 1 && n < 1) 1 else math.min(n, c.numPartitions))
+      case u: UnionExec => u.children.foldLeft(Option(0)) { (acc, child) =>
+        for (a <- acc; n <- splitCount(child, spark)) yield a + n }
+      case _: CollectLimitExec | _: TakeOrderedAndProjectExec => Some(1)
+      case p if p.children.length == 1 => splitCount(p.children.head, spark)
+      case _ => None
+    }
   }
 
   def load(spark: SparkSession, dir: String, name: String): DataFrame =
@@ -131,24 +180,58 @@ object Tables {
   /** `events.ts` arrives in one of two physical forms depending on the data
     * generator: parquet TIMESTAMP(NANOS) (which Spark 4 refuses to read as a
     * timestamp — we read it as exact int64 nanoseconds via the legacy flag),
-    * or a plain parquet timestamp[us] (read as TIMESTAMP_NTZ). Either way the
-    * contract downstream is fixed: `ts` is int64 epoch NANOS (exact ordering
-    * and window math, no doubles) and `ts_t` is a µs TimestampType column for
-    * calendar ops like `date_trunc('week', …)`. All graft sessions run with
-    * session timeZone=UTC, so the NTZ wall-clock == the UTC instant and the
-    * cast below is value-preserving — the same convention DuckDB applies when
-    * `epoch_us(ts)` is taken over the naive column in the oracle SQL. */
+    * or a plain parquet timestamp[us]. Either way the contract downstream is
+    * fixed: `ts` is int64 epoch NANOS (exact ordering and window math, no
+    * doubles) and `ts_t` is a µs TimestampType column for calendar ops like
+    * `date_trunc('week', …)`.
+    *
+    * A timestamp[us] column (INT64 micros in every file, with or without a
+    * zone) is read as its stored LongType micros: `ts` = micros × 1000 and
+    * `ts_t` = `timestamp_micros(micros)`. No row goes through a time-zone
+    * conversion, and the values do not depend on the session time zone: a
+    * zone-less wall clock is taken as UTC, the convention DuckDB applies
+    * when `epoch_us(ts)` is taken over the naive column in the oracle SQL.
+    * Any other form (INT96, millis) is cast to TimestampType in the session
+    * zone, which is UTC in every graft session. */
   def events(s: SparkSession, d: String): DataFrame = {
     import org.apache.spark.sql.functions._
+    import org.apache.spark.sql.types.{LongType, TimestampType}
     s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val raw = load(s, d, "events")
+    val path = s"$d/events.parquet"
+    val raw = parquet(s, path)
     raw.schema("ts").dataType match {
-      case org.apache.spark.sql.types.LongType =>
+      case LongType =>
         raw.withColumn("ts_t", timestamp_micros(expr("ts div 1000")))
+      case _ if storedMicros(raw, "ts") =>
+        s.read.schema(StructType(raw.schema.map(f =>
+            if (f.name == "ts") f.copy(dataType = LongType) else f)))
+          .parquet(path)
+          .withColumn("ts_t", timestamp_micros(col("ts")))
+          .withColumn("ts", col("ts") * lit(1000L))
       case _ =>
-        raw.withColumn("ts_t",
-            col("ts").cast(org.apache.spark.sql.types.TimestampType))
+        raw.withColumn("ts_t", col("ts").cast(TimestampType))
           .withColumn("ts", unix_micros(col("ts_t")) * lit(1000L))
+    }
+  }
+
+  /** Whether every file `df` scans stores `column` as an INT64 timestamp in
+    * microseconds. */
+  private def storedMicros(df: DataFrame, column: String): Boolean = {
+    import org.apache.parquet.schema.LogicalTypeAnnotation.{TimeUnit, TimestampLogicalTypeAnnotation}
+    import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName.INT64
+    df.queryExecution.analyzed.collect {
+      case r: org.apache.spark.sql.execution.datasources.LogicalRelation => r
+    } match {
+      case Seq(r) => Footer.files(r).exists { case (fs, statuses) =>
+        lazy val conf = fs.sparkSession.sessionState.newHadoopConfWithOptions(fs.options)
+        statuses.nonEmpty && statuses.forall(st =>
+          Footer.column(footer(st, conf), column).exists(c => c.physical == INT64 &&
+            (c.annotation match {
+              case t: TimestampLogicalTypeAnnotation => t.getUnit == TimeUnit.MICROS
+              case _ => false
+            })))
+      }
+      case _ => false
     }
   }
   def documents(s: SparkSession, d: String): DataFrame = load(s, d, "documents")

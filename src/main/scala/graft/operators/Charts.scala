@@ -56,16 +56,26 @@ object Charts {
 
   /** Per-(entity, ISO week) score: the weekly snapshot the reference gets
     * from its weekly Airflow cadence. Rounded before any ranking so that
-    * cross-engine rank tiebreaks are deterministic. */
+    * cross-engine rank tiebreaks are deterministic.
+    *
+    * Weeks are UTC Monday buckets in integer arithmetic: the epoch day `d`
+    * is floored from `unix_micros(ts)`, and the week starts on day
+    * `d - pmod(d + 3, 7)` (day 0, 1970-01-01, is a Thursday). Per row that
+    * is a few long operations instead of a calendar `date_trunc`. `wk` is
+    * that Monday as a date and `weeknum` counts weeks from 1970-01-05. */
   def weeklyScores(events: DataFrame, entity: String, ts: String,
                    value: String): DataFrame =
     events
-      .select(col(entity), date_trunc("week", col(ts)).cast("date").as("wk"),
+      .select(col(entity), expr(s"""(unix_micros($ts) -
+          pmod(unix_micros($ts), 86400000000)) div 86400000000""").as("graft_d"),
         col(value))
-      .groupBy(entity, "wk")
+      .select(col(entity), expr("graft_d - pmod(graft_d + 3, 7)").as("graft_w"),
+        col(value))
+      .groupBy(col(entity), col("graft_w"))
       .agg(round(sum(value), 2).as("score"))
-      .withColumn("weeknum",
-        (datediff(col("wk"), lit("1970-01-05").cast("date")) / 7).cast("long"))
+      .select(col(entity),
+        expr("date_from_unix_date(cast(graft_w as int))").as("wk"),
+        col("score"), expr("(graft_w - 4) div 7").as("weeknum"))
 
   /** Rank entities within each week — the per-week chart. */
   def weeklyChart(events: DataFrame, entity: String, ts: String,

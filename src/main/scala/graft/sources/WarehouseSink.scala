@@ -1100,6 +1100,7 @@ object WarehouseSink {
     val newFiles = stageWrite(dir,
       rows.select(schema.fieldNames.toIndexedSeq
         .map(org.apache.spark.sql.functions.col): _*),
+      checked = true,
       options = Map("partitionBy" -> head.partitionCol)
         .filter(_._2.nonEmpty)).files
     // next free slot above BOTH the main head and every ref head
@@ -1320,7 +1321,7 @@ object WarehouseSink {
   /** Stage `df` as an un-referenced append; returns the audit token. */
   def stageAppend(spark: org.apache.spark.sql.SparkSession, dir: String,
                   df: org.apache.spark.sql.DataFrame): String = {
-    val m = stageWrite(dir, df)
+    val m = stageWrite(dir, df, checked = true)
     val token = java.util.UUID.randomUUID.toString.take(12)
     Files.write(Paths.get(dir, s"staged-$token.json"),
       s"""{"schema": "${escape(m.schemaDdl)}", "files": [${m.files.map(f => "\"" + escape(f) + "\"").mkString(", ")}]}"""

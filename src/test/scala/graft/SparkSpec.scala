@@ -37,19 +37,14 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 }
 
 object SparkSpec {
-  lazy val session: SparkSession = SparkSession.builder()
+  /** The shipped session ([[GraftSession.builder]]: extensions, AQE, UTC,
+    * codegen cache, RocksDB state) with the test overrides: two local
+    * cores, two shuffle partitions and a temporary warehouse. */
+  lazy val session: SparkSession = GraftSession.builder("graft-test")
     .master("local[2]")
-    .appName("graft-test")
     .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.sql.session.timeZone", "UTC")
     .config("spark.sql.warehouse.dir",
       java.nio.file.Files.createTempDirectory("graft_wh").toString)
-    // The V2 stateful API (transformWithState) requires a multi-column-
-    // family store: match GraftSession's RocksDB posture.
-    .config("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    .config("spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled",
-      "true")
     .config("spark.ui.enabled", "false")
     .getOrCreate()
 }

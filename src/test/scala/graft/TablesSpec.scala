@@ -60,6 +60,23 @@ class TablesSpec extends SparkSpec {
     assert(spread.count() === edges.count())
   }
 
+  test("spreadBy spreads a one-split scan and keeps a frame already at the core count") {
+    val d = tmpDir("graft_tables_spread")
+    writeOrders(d)
+    val cores = spark.sparkContext.defaultParallelism
+    val scan = Tables.orders(spark, d).filter($"o_custkey" > 0L)
+    var spread: org.apache.spark.sql.DataFrame = null
+    assert(jobsLaunched { spread = Tables.spreadBy(scan, Seq($"o_orderkey")) } === 0)
+    assert(spread.rdd.getNumPartitions === cores)
+    assert(spread.count() === scan.count())
+    val wide = spark.range(0, 100, 1, cores).toDF("k")
+    assert(Tables.spreadBy(wide, Seq($"k")) eq wide)
+    val unioned = wide.union(spark.range(0, 10, 1, 1).toDF("k"))
+    assert(Tables.spreadBy(unioned, Seq($"k")) eq unioned)
+    val narrow = spark.range(0, 100, 1, 1).toDF("k")
+    assert(Tables.spreadBy(narrow, Seq($"k")).rdd.getNumPartitions === cores)
+  }
+
   test("events keeps its ts / ts_t contract on a cached schema") {
     val d = tmpDir("graft_tables_events")
     val t0 = java.time.Instant.parse("2024-03-01T12:34:56.789012Z")

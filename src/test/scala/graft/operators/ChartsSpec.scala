@@ -28,6 +28,36 @@ class ChartsSpec extends SparkSpec {
     assert(got == Map(1L -> "new", 2L -> "only"))
   }
 
+  /** weeklyScores over (entity, UTC instant, value) rows, as (entity,
+    * week start, score, weeknum) sorted by weeknum; checks the output
+    * schema and agreement with the calendar `date_trunc` it replaces. */
+  private def weeks(rows: Seq[(Long, String, Double)]): Seq[(Long, String, Double, Long)] = {
+    val df = rows.map { case (e, t, v) => (e, java.time.Instant.parse(t), v) }
+      .toDF("ent", "ts", "v")
+    val got = Charts.weeklyScores(df, "ent", "ts", "v")
+    assert(got.schema.map(f => f.name -> f.dataType.simpleString) ===
+      Seq("ent" -> "bigint", "wk" -> "date", "score" -> "double", "weeknum" -> "bigint"))
+    val calendar = df.select($"ent", date_trunc("week", $"ts").cast("date").as("wk"))
+      .distinct()
+    assert(got.select("ent", "wk").collect().toSet === calendar.collect().toSet)
+    got.select($"ent", date_format($"wk", "yyyy-MM-dd"), $"score", $"weeknum")
+      .as[(Long, String, Double, Long)].collect().sortBy(_._4).toSeq
+  }
+
+  test("weeklyScores splits UTC weeks between Sunday 23:59:59.999999 and Monday 00:00") {
+    assert(weeks(Seq(
+      (1L, "2024-01-07T23:59:59.999999Z", 1.0), // Sunday: week of Mon Jan 1
+      (1L, "2024-01-08T00:00:00Z", 2.0))) ===   // Monday: its own week
+      Seq((1L, "2024-01-01", 1.0, 2817L), (1L, "2024-01-08", 2.0, 2818L)))
+  }
+
+  test("weeklyScores buckets 1969 timestamps into their Monday weeks") {
+    assert(weeks(Seq(
+      (2L, "1969-12-31T23:00:00Z", 4.0),   // Wednesday: week of Dec 29
+      (2L, "1969-07-20T20:17:00Z", 8.0))) === // Sunday: week of Jul 14
+      Seq((2L, "1969-07-14", 8.0, -25L), (2L, "1969-12-29", 4.0, -1L)))
+  }
+
   test("weeksOnChart counts consecutive weeks ending at the newest week") {
     // 3 weekly periods (Mondays). Entity 1 charted in all 3; entity 2 only
     // in weeks 1-2 of 3 (streak broken at the end → 0); entity 3 only in

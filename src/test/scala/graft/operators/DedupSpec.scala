@@ -318,12 +318,19 @@ class DedupSpec extends SparkSpec {
       .write.bucketBy(4, "bk").saveAsTable(tbl)
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try {
-      val batch = Seq((1L, Array(0.9f, 0.2f))).toDF("vec_id", "embedding")
-      val plan = Dedup.incrementalSemantic(batch, "vec_id", "embedding",
+      // Two batch rows: a one-row batch is a local relation, whose join
+      // the optimizer folds into a literal filter on the store (below).
+      val batch = Seq((1L, Array(0.9f, 0.2f)), (2L, Array(0.8f, 0.3f)))
+        .toDF("vec_id", "embedding")
+      def planOf(b: org.apache.spark.sql.DataFrame) =
+        Dedup.incrementalSemantic(b, "vec_id", "embedding",
           signBits = 2, minCos = 0.9, spark.table(tbl))
         .queryExecution.executedPlan.toString
+      val plan = planOf(batch)
       val shuffles = "Exchange hashpartitioning".r.findAllIn(plan).length
       assert(shuffles === 1, s"expected one shuffle (batch side only):\n$plan")
+      assert("Exchange".r.findAllIn(planOf(Seq((1L, Array(0.9f, 0.2f)))
+        .toDF("vec_id", "embedding"))).isEmpty)
     } finally {
       spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
       spark.sql(s"DROP TABLE IF EXISTS $tbl")

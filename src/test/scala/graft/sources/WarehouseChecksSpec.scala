@@ -107,6 +107,32 @@ class WarehouseChecksSpec extends SparkSpec {
     }
   }
 
+  test("write-audit-publish staging refuses rows the CHECK policy refuses") {
+    val dir = tmp(); seed(dir) // v = 10, 20
+    WarehouseSink.addCheck(spark, dir,
+      WarehouseSink.Check("v_cap", "max", "v", "30"))
+    intercept[Exception] {
+      val tok = WarehouseSink.stageAppend(spark, dir,
+        Seq((6L, "a", 60.0)).toDF("id", "grp", "v"))
+      WarehouseSink.promoteStaged(dir, tok)
+    }
+    assert(ids(dir) === Seq(1L, 2L))
+  }
+
+  test("a branch append refuses rows the CHECK policy refuses") {
+    val dir = tmp(); seed(dir)
+    WarehouseSink.addCheck(spark, dir,
+      WarehouseSink.Check("v_cap", "max", "v", "30"))
+    WarehouseSink.createBranch(dir, "audit")
+    intercept[Exception] {
+      WarehouseSink.appendToBranch(spark, dir, "audit",
+        Seq((7L, "a", 70.0)).toDF("id", "grp", "v"))
+    }
+    val onBranch = spark.read.format(Fmt).option("path", dir)
+      .option("ref", "audit").load().select("id").as[Long].collect().sorted
+    assert(onBranch.toSeq === Seq(1L, 2L))
+  }
+
   test("streaming epochs enforce checks; the failed epoch never publishes") {
     implicit val sqlCtx = spark.sqlContext
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
