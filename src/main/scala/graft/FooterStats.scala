@@ -8,7 +8,7 @@ import org.apache.hadoop.fs.FileStatus
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.schema.LogicalTypeAnnotation
-import org.apache.parquet.schema.LogicalTypeAnnotation.{IntLogicalTypeAnnotation, TimeUnit, TimestampLogicalTypeAnnotation}
+import org.apache.parquet.schema.LogicalTypeAnnotation.{DateLogicalTypeAnnotation, IntLogicalTypeAnnotation, TimeUnit, TimestampLogicalTypeAnnotation}
 import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions._
@@ -20,6 +20,7 @@ import org.apache.spark.sql.catalyst.trees.TreePattern.{AGGREGATE, JOIN}
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.internal.SQLConf
+import org.apache.spark.sql.sources.BaseRelation
 import org.apache.spark.sql.types._
 
 /** What graft reads from one parquet footer: the file's row count and each
@@ -74,13 +75,14 @@ private[graft] object Footer {
     * one: a batch `HadoopFsRelation` over `ParquetFileFormat` itself (not
     * a subclass) with no partition columns. */
   def files(rel: LogicalRelation): Option[(HadoopFsRelation, Seq[FileStatus])] =
-    rel.relation match {
-      case fs: HadoopFsRelation if !rel.isStreaming &&
-          fs.partitionSchema.isEmpty &&
-          fs.fileFormat.getClass == classOf[ParquetFileFormat] =>
-        Some(fs -> fs.location.listFiles(Nil, Nil).flatMap(_.files).map(_.fileStatus))
-      case _ => None
-    }
+    if (rel.isStreaming) None else files(rel.relation)
+
+  def files(rel: BaseRelation): Option[(HadoopFsRelation, Seq[FileStatus])] = rel match {
+    case fs: HadoopFsRelation if fs.partitionSchema.isEmpty &&
+        fs.fileFormat.getClass == classOf[ParquetFileFormat] =>
+      Some(fs -> fs.location.listFiles(Nil, Nil).flatMap(_.files).map(_.fileStatus))
+    case _ => None
+  }
 
   /** The footer column named `name` under the session's resolver, if
     * exactly one matches. */
@@ -93,13 +95,22 @@ private[graft] object Footer {
   }
 
   /** Whether a scan reading `c` as Spark type `t` returns the stored
-    * integers unchanged, so the footer's min and max are the scan's. */
+    * integers unchanged, so the footer's min and max are the scan's. A
+    * DATE is stored as its epoch day and a microsecond TIMESTAMP as its
+    * epoch micros, which are also Spark's DateType and TimestampType
+    * (UTC-adjusted) or TimestampNTZType (not adjusted) values, as long as
+    * the read rebases nothing ([[firstUnrebased]]). */
   def readsStored(c: Column, t: DataType): Boolean = (c.physical, c.annotation) match {
     case (PrimitiveTypeName.INT64, null) => t == LongType
     case (PrimitiveTypeName.INT64, i: IntLogicalTypeAnnotation) => i.isSigned && t == LongType
-    case (PrimitiveTypeName.INT64, ts: TimestampLogicalTypeAnnotation) =>
-      t == LongType && ts.getUnit != TimeUnit.MILLIS
+    case (PrimitiveTypeName.INT64, ts: TimestampLogicalTypeAnnotation) => t match {
+      case LongType => ts.getUnit != TimeUnit.MILLIS
+      case TimestampType => ts.getUnit == TimeUnit.MICROS && ts.isAdjustedToUTC
+      case TimestampNTZType => ts.getUnit == TimeUnit.MICROS && !ts.isAdjustedToUTC
+      case _ => false
+    }
     case (PrimitiveTypeName.INT32, null) => t == IntegerType || t == LongType
+    case (PrimitiveTypeName.INT32, _: DateLogicalTypeAnnotation) => t == DateType
     case (PrimitiveTypeName.INT32, i: IntLogicalTypeAnnotation) if i.isSigned =>
       t match {
         case IntegerType | LongType => true
@@ -109,6 +120,15 @@ private[graft] object Footer {
       }
     case _ => false
   }
+
+  /** The smallest stored value a read of each calendar type never
+    * rebases from the hybrid Julian calendar: 1582-10-15 for days, and
+    * 1900-01-02 UTC for micros (past the last switch of any time zone). A
+    * column whose footer min is below it is left to the scan. */
+  val firstUnrebased: Map[DataType, Long] = Map(
+    DateType -> -141427L,
+    TimestampType -> -2208902400000000L,
+    TimestampNTZType -> -2208902400000000L)
 }
 
 /** Answers a table-wide MIN/MAX/COUNT(*) from parquet footers: a global
@@ -117,11 +137,12 @@ private[graft] object Footer {
   * KB of footers instead of the table.
   *
   * Every aggregate must be a non-distinct, unfiltered `count(*)` (row
-  * counts) or `min`/`max` of one INT32/INT64 column read as stored,
-  * wrapped only in steps that never decrease: `*` or `div` by a positive
-  * integral literal, `+`/`-` of an integral literal, and widening
-  * integral casts. Arithmetic must be ANSI (wrapping on overflow is not
-  * monotone). The wrapper is evaluated on the column's footer min and
+  * counts) or `min`/`max` of one INT32/INT64 column read as stored (an
+  * integer, a DATE or a microsecond TIMESTAMP), wrapped only in steps
+  * that never decrease: `*` or `div` by a positive integral literal,
+  * `+`/`-` of an integral literal, widening integral casts, and the
+  * identities `timestamp_micros` and `unix_micros`. Arithmetic must be
+  * ANSI (wrapping on overflow is not monotone). The wrapper is evaluated on the column's footer min and
   * max, so a step that overflows on either throws here, and the plan is
   * left as it is: the scan then throws as it would have. The plan is also
   * left alone when any file lacks complete statistics for the column,
@@ -160,6 +181,8 @@ object FooterAggregate extends Rule[LogicalPlan] {
             return None
           val range = cols.flatMap(_.get.range).reduceOption((x, y) =>
             (math.min(x._1, y._1), math.max(x._2, y._2)))
+          if (range.exists(r => Footer.firstUnrebased.get(c.dataType).exists(r._1 < _)))
+            return None
           // Both ends are evaluated: an end that overflows throws here.
           val ends = range.map { case (lo, hi) => (at(arg, c, lo), at(arg, c, hi)) }
           ae -> Literal(ends.map(e => if (isMax) e._2 else e._1).orNull, ae.dataType)
@@ -194,7 +217,7 @@ object FooterAggregate extends Rule[LogicalPlan] {
     val value: Any = c.dataType match {
       case ByteType => Math.toIntExact(v).toByte
       case ShortType => Math.toIntExact(v).toShort
-      case IntegerType => Math.toIntExact(v)
+      case IntegerType | DateType => Math.toIntExact(v)
       case _ => v
     }
     arg.transform {
@@ -202,8 +225,8 @@ object FooterAggregate extends Rule[LogicalPlan] {
     }.eval()
   }
 
-  /** The data column `e` rises with, when `e` is one integral column
-    * wrapped only in non-decreasing ANSI steps. */
+  /** The data column `e` rises with, when `e` is one integral, DATE or
+    * TIMESTAMP column wrapped only in non-decreasing ANSI steps. */
   private def monotoneOver(e: Expression,
                            cols: Seq[Attribute]): Option[AttributeReference] = {
     def integral(t: DataType) = t match {
@@ -219,8 +242,11 @@ object FooterAggregate extends Rule[LogicalPlan] {
     }
     def ansi(b: BinaryArithmetic) = b.evalMode == EvalMode.ANSI
     e match {
-      case a: AttributeReference if integral(a.dataType) && cols.exists(_.exprId == a.exprId) =>
+      case a: AttributeReference if (integral(a.dataType) ||
+          Footer.firstUnrebased.contains(a.dataType)) && cols.exists(_.exprId == a.exprId) =>
         Some(a)
+      case MicrosToTimestamp(child) if integral(child.dataType) => monotoneOver(child, cols)
+      case UnixMicros(child) => monotoneOver(child, cols)
       case c: Cast if integral(c.child.dataType) && integral(c.dataType) &&
           c.dataType.defaultSize >= c.child.dataType.defaultSize =>
         monotoneOver(c.child, cols)

@@ -9,14 +9,31 @@ import org.apache.spark.sql.types.StructType
   * pruning and predicate pushdown: every operator downstream selects only
   * the columns it needs *before* wide transforms, which at 100 TB turns
   * these into narrow columnar scans with PushedFilters instead of
-  * full-table reads. [[parquet]] reuses each file version's inferred schema,
-  * so building a plan over a known table launches no job.
+  * full-table reads. [[parquet]] resolves each file version once (schema
+  * inference, data source lookup and file listing) and serves every later
+  * read of that version from the resolved relation, so building a plan
+  * over a known table launches no job and lists nothing but the path.
   */
 object Tables {
-  /** Inferred schemas by (qualified path, modification time, length,
-    * inference confs). Cleared by `SparkEntry.releaseCaches()`. */
-  private val schemas =
-    scala.collection.concurrent.TrieMap.empty[(String, Long, Long, Seq[String]), StructType]
+  import org.apache.hadoop.fs.{FileStatus, Path}
+  import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+
+  /** A resolved parquet relation and the version it was resolved at: the
+    * (name, modification time, length) of each leaf file and the
+    * inference confs. */
+  private final case class Resolved(version: (Seq[(String, Long, Long)], Seq[String]),
+                                    relation: HadoopFsRelation)
+
+  /** A kept relation holds its file index's copy of the Hadoop conf (about
+    * 110 KB a path, measured), so only the paths read last are kept. */
+  private[graft] val MaxRelations = 64
+
+  /** One resolved relation per qualified path, in access order; a new
+    * version replaces the old one. Cleared by `SparkEntry.releaseCaches()`. */
+  private val relations = new java.util.LinkedHashMap[String, Resolved](16, 0.75f, true) {
+    override def removeEldestEntry(e: java.util.Map.Entry[String, Resolved]): Boolean =
+      size > MaxRelations
+  }
 
   /** Session confs that change the schema parquet inference yields:
     * `Tables.events` sets `nanosAsLong`, which turns TIMESTAMP(NANOS) `ts`
@@ -28,33 +45,71 @@ object Tables {
     "spark.sql.parquet.inferTimestampNTZ.enabled",
     "spark.sql.parquet.mergeSchema")
 
-  /** `spark.read.parquet(path)` without its per-read schema inference.
-    * Inference lists the path, reads a footer and runs a one-task
-    * schema-merge job; an interactive session reading the same tables op
-    * after op paid that job on every read. The inferred schema is kept per
-    * file version (the path's status: a rewrite replaces the file or
-    * directory and moves its modification time) and handed back as a
-    * user schema. Every call still builds a FRESH relation, so two reads
-    * in one query carry distinct attribute ids and self-join cleanly.
+  /** `spark.read.parquet(path)` resolved once per file version. A plain
+    * read looks up the data source, copies Hadoop confs, checks the path,
+    * lists the files, and infers the schema with a one-task job; an
+    * interactive session reading the same tables op after op paid all of
+    * that on every read. Here the path's leaf files are listed (one status
+    * call for a file, one listing for a flat directory) and, while they are
+    * unchanged (same names, modification times and lengths) and the session
+    * and inference confs are the same, the kept `HadoopFsRelation` is
+    * handed back through `baseRelationToDataFrame`. Every read still builds
+    * a FRESH `LogicalRelation`, so two reads in one query carry distinct
+    * attribute ids and self-join cleanly. Any change to a leaf, also a file
+    * rewritten in place inside the directory, resolves the path again.
     *
-    * A change nested below a directory that leaves the directory's own
-    * status alone (a file swapped inside a partition subdirectory) is not
-    * seen until [[clearCaches]]. Paths that do not resolve to one status
-    * (missing paths, globs) take the plain read and its errors. */
+    * Paths that are not one file or a flat directory of files (globs,
+    * missing paths, nested or partitioned directories) take the plain read
+    * and its errors. */
   def parquet(spark: SparkSession, path: String): DataFrame = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val status =
-      try Some(p.getFileSystem(spark.sparkContext.hadoopConfiguration).getFileStatus(p))
-      catch { case _: java.io.FileNotFoundException | _: IllegalArgumentException => None }
-    status match {
+    val p = new Path(path)
+    leaves(spark, p) match {
       case None => spark.read.parquet(path)
-      case Some(st) =>
-        val key = (st.getPath.toString, st.getModificationTime, st.getLen,
-          inferenceConfs.map(k => spark.conf.getOption(k).getOrElse("")))
-        val schema = schemas.getOrElseUpdate(key, spark.read.parquet(path).schema)
-        spark.read.schema(schema).parquet(path)
+      case Some((key, files)) =>
+        val version = (files, inferenceConfs.map(k => spark.conf.getOption(k).getOrElse("")))
+        relations.synchronized(Option(relations.get(key))) match {
+          case Some(r) if r.version == version && (r.relation.sparkSession eq spark) =>
+            spark.baseRelationToDataFrame(r.relation)
+          case _ =>
+            val df = spark.read.parquet(path)
+            relation(df).foreach(rel =>
+              relations.synchronized(relations.put(key, Resolved(version, rel))))
+            df
+        }
     }
   }
+
+  /** The qualified path and the sorted (name, modification time, length)
+    * of each file `p` holds: itself when it is a file, its children when it
+    * is a directory of files. None for a glob, a missing path, or a
+    * directory with a subdirectory. */
+  private def leaves(spark: SparkSession,
+                     p: Path): Option[(String, Seq[(String, Long, Long)])] =
+    if (p.toString.exists("{}[]*?\\".contains(_))) None
+    else {
+      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      val status =
+        try Some(fs.getFileStatus(p))
+        catch { case _: java.io.FileNotFoundException | _: IllegalArgumentException => None }
+      status.flatMap { st =>
+        val files: Seq[FileStatus] = if (st.isDirectory) fs.listStatus(st.getPath).toSeq else Seq(st)
+        if (files.exists(_.isDirectory)) None
+        else Some(st.getPath.toString -> files
+          .map(f => (f.getPath.getName, f.getModificationTime, f.getLen)).sortBy(_._1))
+      }
+    }
+
+  /** The `HadoopFsRelation` a single-relation read scans. */
+  private def relation(df: DataFrame): Option[HadoopFsRelation] =
+    df.queryExecution.analyzed.collect {
+      case LogicalRelation(fs: HadoopFsRelation, _, _, false, _) => fs
+    } match {
+      case Seq(fs) => Some(fs)
+      case _ => None
+    }
+
+  private[graft] def cachedPaths: Seq[String] =
+    relations.synchronized(relations.keySet.toArray(Array.empty[String]).toSeq)
 
   /** Footers by file version (qualified path, modification time, length),
     * read by [[FooterAggregate]] and [[events]]: a row count and, per
@@ -69,8 +124,11 @@ object Tables {
 
   private[graft] def cachedFooters: Int = footers.size
 
-  /** Drop the kept schemas and footers. */
-  private[graft] def clearCaches(): Unit = { schemas.clear(); footers.clear() }
+  /** Drop the kept relations and footers. */
+  private[graft] def clearCaches(): Unit = {
+    relations.synchronized(relations.clear())
+    footers.clear()
+  }
 
   /** OPT-IN guard against single-task map stages on low-split inputs
     * (spark_optimization_guide §2.5, "input skew: one huge unsplittable
@@ -197,41 +255,38 @@ object Tables {
     import org.apache.spark.sql.functions._
     import org.apache.spark.sql.types.{LongType, TimestampType}
     s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val path = s"$d/events.parquet"
-    val raw = parquet(s, path)
+    val raw = parquet(s, s"$d/events.parquet")
     raw.schema("ts").dataType match {
       case LongType =>
         raw.withColumn("ts_t", timestamp_micros(expr("ts div 1000")))
-      case _ if storedMicros(raw, "ts") =>
-        s.read.schema(StructType(raw.schema.map(f =>
-            if (f.name == "ts") f.copy(dataType = LongType) else f)))
-          .parquet(path)
-          .withColumn("ts_t", timestamp_micros(col("ts")))
-          .withColumn("ts", col("ts") * lit(1000L))
-      case _ =>
-        raw.withColumn("ts_t", col("ts").cast(TimestampType))
-          .withColumn("ts", unix_micros(col("ts_t")) * lit(1000L))
+      case _ => relation(raw).filter(storedMicros(_, "ts")) match {
+        case Some(fs) =>
+          // The read's own relation with `ts` as its stored LongType: no
+          // second resolution of the path.
+          s.baseRelationToDataFrame(fs.copy(dataSchema = StructType(fs.dataSchema.map(f =>
+              if (f.name == "ts") f.copy(dataType = LongType) else f)))(fs.sparkSession))
+            .withColumn("ts_t", timestamp_micros(col("ts")))
+            .withColumn("ts", col("ts") * lit(1000L))
+        case None =>
+          raw.withColumn("ts_t", col("ts").cast(TimestampType))
+            .withColumn("ts", unix_micros(col("ts_t")) * lit(1000L))
+      }
     }
   }
 
-  /** Whether every file `df` scans stores `column` as an INT64 timestamp in
+  /** Whether every file `fs` scans stores `column` as an INT64 timestamp in
     * microseconds. */
-  private def storedMicros(df: DataFrame, column: String): Boolean = {
+  private def storedMicros(fs: HadoopFsRelation, column: String): Boolean = {
     import org.apache.parquet.schema.LogicalTypeAnnotation.{TimeUnit, TimestampLogicalTypeAnnotation}
     import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName.INT64
-    df.queryExecution.analyzed.collect {
-      case r: org.apache.spark.sql.execution.datasources.LogicalRelation => r
-    } match {
-      case Seq(r) => Footer.files(r).exists { case (fs, statuses) =>
-        lazy val conf = fs.sparkSession.sessionState.newHadoopConfWithOptions(fs.options)
-        statuses.nonEmpty && statuses.forall(st =>
-          Footer.column(footer(st, conf), column).exists(c => c.physical == INT64 &&
-            (c.annotation match {
-              case t: TimestampLogicalTypeAnnotation => t.getUnit == TimeUnit.MICROS
-              case _ => false
-            })))
-      }
-      case _ => false
+    Footer.files(fs).exists { case (_, statuses) =>
+      lazy val conf = fs.sparkSession.sessionState.newHadoopConfWithOptions(fs.options)
+      statuses.nonEmpty && statuses.forall(st =>
+        Footer.column(footer(st, conf), column).exists(c => c.physical == INT64 &&
+          (c.annotation match {
+            case t: TimestampLogicalTypeAnnotation => t.getUnit == TimeUnit.MICROS
+            case _ => false
+          })))
     }
   }
   def documents(s: SparkSession, d: String): DataFrame = load(s, d, "documents")

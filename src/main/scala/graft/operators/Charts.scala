@@ -56,26 +56,33 @@ object Charts {
 
   /** Per-(entity, ISO week) score: the weekly snapshot the reference gets
     * from its weekly Airflow cadence. Rounded before any ranking so that
-    * cross-engine rank tiebreaks are deterministic.
-    *
-    * Weeks are UTC Monday buckets in integer arithmetic: the epoch day `d`
-    * is floored from `unix_micros(ts)`, and the week starts on day
-    * `d - pmod(d + 3, 7)` (day 0, 1970-01-01, is a Thursday). Per row that
-    * is a few long operations instead of a calendar `date_trunc`. `wk` is
-    * that Monday as a date and `weeknum` counts weeks from 1970-01-05. */
+    * cross-engine rank tiebreaks are deterministic. `wk` is the week's
+    * Monday as a date and `weeknum` counts weeks from 1970-01-05
+    * ([[weekStart]], [[weekNumber]]). */
   def weeklyScores(events: DataFrame, entity: String, ts: String,
                    value: String): DataFrame =
     events
-      .select(col(entity), expr(s"""(unix_micros($ts) -
-          pmod(unix_micros($ts), 86400000000)) div 86400000000""").as("graft_d"),
-        col(value))
-      .select(col(entity), expr("graft_d - pmod(graft_d + 3, 7)").as("graft_w"),
-        col(value))
+      .select(col(entity), weekStart(unix_micros(col(ts))).as("graft_w"), col(value))
       .groupBy(col(entity), col("graft_w"))
       .agg(round(sum(value), 2).as("score"))
       .select(col(entity),
         expr("date_from_unix_date(cast(graft_w as int))").as("wk"),
-        col("score"), expr("(graft_w - 4) div 7").as("weeknum"))
+        col("score"), weekNumber(col("graft_w")).as("weeknum"))
+
+  private val DayMicros = 86400000000L
+
+  /** The epoch day of the Monday that starts the UTC week holding the
+    * instant `micros`, in integer arithmetic: the epoch day `d` is floored
+    * from the micros, and its week starts on day `d - pmod(d + 3, 7)` (day
+    * 0, 1970-01-01, is a Thursday). Per row that is a few long operations
+    * instead of a calendar `date_trunc`. */
+  private def weekStart(micros: Column): Column = {
+    val day = call_function("div", micros - pmod(micros, lit(DayMicros)), lit(DayMicros))
+    day - pmod(day + 3, lit(7L))
+  }
+
+  /** Weeks from Monday 1970-01-05 to the week starting on epoch day `start`. */
+  private def weekNumber(start: Column): Column = call_function("div", start - 4, lit(7L))
 
   /** Rank entities within each week — the per-week chart. */
   def weeklyChart(events: DataFrame, entity: String, ts: String,
@@ -94,31 +101,34 @@ object Charts {
     * number of consecutive weekly appearances in the top-`k` chart, reset to 0
     * on a gap, and reported as 0 unless the streak reaches the newest week.
     *
-    * Plan: weekly pre-agg → per-week row_number (chart membership) →
-    * gaps-and-islands (weeknum - row_number over entity) → count of the
-    * island that touches the global max week. The global max week is a 1-row
-    * aggregate joined via broadcast.
+    * Plan: weekly pre-agg → per-week row_number (chart membership `on`) →
+    * one window over each entity's weeks, newest first, whose running
+    * `sum(on)` counts the entity's charted weeks from that week on. A
+    * charted week is in the final streak exactly when that count fills
+    * every week up to the newest one (`weeknum + run = maxwk + 1`), so a
+    * per-entity count of such weeks is the streak, 0 for an entity never
+    * charted. That is three exchanges over the pre-aggregate and no join.
+    * The newest week is the week of the input's newest instant: a one-row
+    * aggregate that the footers answer over a plain parquet read
+    * ([[graft.FooterAggregate]]) and that is otherwise computed and
+    * broadcast. A NULL entity reports 0, as the reference's keyed join
+    * gives it no streak.
     */
   def weeksOnChart(events: DataFrame, entity: String, ts: String,
                    value: String, k: Int): DataFrame = {
-    val weekly = weeklyScores(events, entity, ts, value)
     val rankW = Window.partitionBy("wk").orderBy(col("score").desc, col(entity).asc)
-    val charted = weekly
-      .withColumn("rnk", row_number().over(rankW))
-      .filter(col("rnk") <= k)
-      .select(col(entity), col("weeknum"))
-    val maxWeek = weekly.agg(max("weeknum").as("maxwk"))
-    val islandW = Window.partitionBy(entity).orderBy(col("weeknum").asc)
-    val islands = charted.withColumn("grp",
-      col("weeknum") - row_number().over(islandW))
-    val lastIsland = islands.groupBy(col(entity), col("grp"))
-      .agg(count(lit(1)).as("cnt"), max("weeknum").as("mxw"))
-    val streaks = lastIsland
-      .join(broadcast(maxWeek), col("mxw") === col("maxwk"))
-      .select(col(entity), col("cnt"))
-    weekly.select(entity).distinct()
-      .join(streaks, Seq(entity), "left")
-      .select(col(entity), coalesce(col("cnt"), lit(0L)).as("weeks_on_chart"))
+    val runW = Window.partitionBy(entity).orderBy(col("weeknum").desc)
+      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    val newest = events.agg(max(unix_micros(col(ts))).as("graft_maxus"))
+    val maxWeek = weekNumber(weekStart(col("graft_maxus")))
+    weeklyScores(events, entity, ts, value)
+      .select(col(entity), col("weeknum"),
+        when(row_number().over(rankW) <= k, 1L).otherwise(0L).as("graft_on"))
+      .withColumn("graft_run", sum("graft_on").over(runW))
+      .crossJoin(broadcast(newest))
+      .groupBy(col(entity))
+      .agg(count(when(col(entity).isNotNull && col("graft_on") === 1L &&
+        col("weeknum") + col("graft_run") === maxWeek + 1L, lit(1))).as("weeks_on_chart"))
   }
 
   /** Leaderboard turnover — how volatile is the top-k chart week over

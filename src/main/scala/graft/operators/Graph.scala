@@ -64,10 +64,16 @@ object Graph {
       .transform(df => graft.Tables.spreadBy(df, Seq(col("graft_s"))))
       .distinct())
 
-  /** Persist `df` and fill it before anything reads it. */
-  private def pin(df: DataFrame): DataFrame = {
+  /** Persist `df` and fill it before anything reads it: one job over the
+    * cache entry's own batches (after the jobs of the cached plan's
+    * shuffles). A `count()` adds an aggregate whose final stage is a job of
+    * its own, and a count over a query plan of `p` adds the adaptive
+    * planner's cache-filling stage as one more. */
+  private[operators] def pin(df: DataFrame): DataFrame = {
     val p = df.persist(StorageLevel.MEMORY_AND_DISK)
-    p.count()
+    val session = p.queryExecution.sparkSession
+    session.sharedState.cacheManager.lookupCachedData(session, p.queryExecution.analyzed)
+      .foreach(_.cachedRepresentation.cacheBuilder.cachedColumnBuffers.count())
     p
   }
 

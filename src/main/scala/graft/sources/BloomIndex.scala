@@ -1,6 +1,7 @@
 package graft.sources
 
 import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.{Literal, XxHash64}
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
 import org.apache.spark.util.sketch.BloomFilter
@@ -81,16 +82,17 @@ object BloomIndex {
     candidateQuery(spark, sidecarPath, value).collect().toSeq
   }
 
+  /** The hash the build's `xxhash64(key as string)` column gives `value`:
+    * the same expression with the same default seed, evaluated on the
+    * driver (no query), so a Spark upgrade that changes the function moves
+    * build and probe together instead of diverging into false negatives. */
+  private[sources] def probeHash(value: String): Long =
+    new XxHash64(Seq(Literal(value))).eval().asInstanceOf[Long]
+
   private[sources] def candidateQuery(spark: SparkSession, sidecarPath: String,
                              value: String): org.apache.spark.sql.Dataset[String] = {
     import spark.implicits._
-    // Probe hash computed through the SAME public xxhash64 function the
-    // build pass used — if a Spark upgrade ever changes that function's
-    // seed or implementation, build and probe move together instead of
-    // silently diverging into false negatives. Over a one-row local
-    // relation the optimizer folds the projection on the driver, so no
-    // job is launched (`spark.range(1)` would schedule one).
-    val h = Seq(value).toDF("v").select(xxhash64(col("v"))).head.getLong(0)
+    val h = probeHash(value)
     graft.Tables.parquet(spark, sidecarPath)
       .as[(String, Array[Byte])]
       .filter { case (_, bytes) =>

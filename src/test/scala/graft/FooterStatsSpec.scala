@@ -163,4 +163,93 @@ class FooterStatsSpec extends SparkSpec {
         .size === 1, p138.toString)
     } finally SparkEntry.releaseCaches()
   }
+
+  test("a DATE column's min and max come from the footers") {
+    val path = s"${tmp("graft_footer_date")}/t.parquet"
+    val days = Seq("1969-07-20", "1995-03-01", "2024-02-29", "1998-08-02")
+      .map(java.time.LocalDate.parse)
+    days.zipWithIndex.map { case (d, i) => (i.toLong, d) }.toDF("id", "d")
+      .repartition(2).write.parquet(path)
+    val q = Tables.parquet(spark, path).agg(min($"d"), max($"d"))
+    assert(answered(q), q.queryExecution.optimizedPlan.toString)
+    var row: org.apache.spark.sql.Row = null
+    assert(jobsLaunched { row = q.head() } === 0)
+    assert(row.getDate(0).toLocalDate === days.min && row.getDate(1).toLocalDate === days.max)
+    val julian = s"${tmp("graft_footer_julian")}/t.parquet"
+    Seq(java.time.LocalDate.parse("1500-03-01"), days.head).toDF("d").write.parquet(julian)
+    assert(scanned(Tables.parquet(spark, julian).agg(min($"d"))))
+  }
+
+  test("an all-null DATE column answers NULL; one written without stats is scanned") {
+    val d = tmp("graft_footer_date_no")
+    Seq((1L, Option.empty[java.time.LocalDate]), (2L, None)).toDF("id", "d")
+      .write.parquet(s"$d/null.parquet")
+    val nulls = spark.read.parquet(s"$d/null.parquet").agg(max($"d"), min($"d"))
+    assert(answered(nulls))
+    assert(nulls.head().toSeq === Seq(null, null))
+    Seq(java.time.LocalDate.parse("2020-01-02"), java.time.LocalDate.parse("2021-05-06"))
+      .toDF("d").write.option("parquet.column.statistics.enabled", "false")
+      .parquet(s"$d/nostats.parquet")
+    val ns = spark.read.parquet(s"$d/nostats.parquet").agg(max($"d"))
+    assert(scanned(ns))
+    assert(ns.head().getDate(0).toLocalDate === java.time.LocalDate.parse("2021-05-06"))
+  }
+
+  test("a microsecond TIMESTAMP column is answered; one before 1900 is scanned") {
+    val d = tmp("graft_footer_ts")
+    val walls = Seq("2024-03-01T12:34:56.789012", "1995-01-01T00:00:00", "2001-08-01T00:00:00")
+      .map(java.time.LocalDateTime.parse)
+    walls.toDF("t").write.parquet(s"$d/ntz.parquet")
+    val ntz = Tables.parquet(spark, s"$d/ntz.parquet").agg(min($"t"), max($"t"))
+    assert(answered(ntz), ntz.queryExecution.optimizedPlan.toString)
+    assert(ntz.head().toSeq === Seq(walls.min, walls.max))
+    val instants = walls.map(_.toInstant(java.time.ZoneOffset.UTC))
+    spark.conf.set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
+    try instants.toDF("t").write.parquet(s"$d/ltz.parquet")
+    finally spark.conf.unset("spark.sql.parquet.outputTimestampType")
+    val ltz = Tables.parquet(spark, s"$d/ltz.parquet").agg(max(unix_micros($"t")), min($"t"))
+    assert(answered(ltz), ltz.queryExecution.optimizedPlan.toString)
+    assert(ltz.head().getLong(0) === 1709296496789012L)
+    assert(ltz.head().getTimestamp(1).toInstant === instants.min)
+    Seq(java.time.LocalDateTime.parse("1899-12-31T23:00:00"), walls.head).toDF("t")
+      .write.parquet(s"$d/old.parquet")
+    val old = Tables.parquet(spark, s"$d/old.parquet").agg(min($"t"))
+    assert(scanned(old))
+    assert(old.head().get(0) === java.time.LocalDateTime.parse("1899-12-31T23:00:00"))
+  }
+
+  test("unix_micros(timestamp_micros(x)) is answered as x") {
+    val path = s"${tmp("graft_footer_micros")}/t.parquet"
+    Seq(-5L, 1709296496789012L, 42L).toDF("x").write.parquet(path)
+    val q = Tables.parquet(spark, path)
+      .agg(max(unix_micros(timestamp_micros($"x"))), min(unix_micros(timestamp_micros($"x"))))
+    assert(answered(q), q.queryExecution.optimizedPlan.toString)
+    assert(q.head().toSeq === Seq(1709296496789012L, -5L))
+  }
+
+  test("weeks-on-chart scans events once, joins nothing and runs at most 4 jobs") {
+    val dir = tmp("graft_footer_weeks")
+    (0L until 60L).map(i => (i, java.time.LocalDateTime.of(2024, 1, 1, 6, 0).plusHours(i * 29),
+        i % 7, "view", (i % 11) * 1.5))
+      .toDF("event_id", "ts", "user_id", "event_type", "value")
+      .write.parquet(s"$dir/events.parquet")
+    try {
+      val q08 = SparkEntry.queries("q08_weeks_on_chart")(spark, dir)
+      val opt = q08.queryExecution.optimizedPlan
+      assert(opt.collect { case r: org.apache.spark.sql.execution.datasources.LogicalRelation => r }
+        .size === 1, opt.toString)
+      assert(!opt.exists(_.isInstanceOf[Join]), opt.toString)
+      var rows: Array[org.apache.spark.sql.Row] = null
+      val jobs = jobsLaunched { rows = q08.collect() }
+      assert(jobs <= 4, s"$jobs jobs")
+      assert(rows.length === 7)
+      val plan = q08.queryExecution.executedPlan
+      val nodes = Helper.collect(plan) { case n => n.nodeName }
+      assert(nodes.count(_.contains("Scan")) === 1, plan.toString)
+      assert(!nodes.exists(n => n.contains("Join") || n.contains("BroadcastExchange")),
+        plan.toString)
+    } finally SparkEntry.releaseCaches()
+  }
+
+  private object Helper extends org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 }

@@ -15,10 +15,77 @@ class TablesSpec extends SparkSpec {
   test("a second load of a table infers nothing and launches no job") {
     val d = tmpDir("graft_tables_reuse")
     writeOrders(d)
-    val first = jobsLaunched(Tables.orders(spark, d))
-    assert(first >= 1, "the first load infers the schema with a job")
-    assert(jobsLaunched(Tables.orders(spark, d)) === 0)
+    var first: org.apache.spark.sql.DataFrame = null
+    assert(jobsLaunched { first = Tables.orders(spark, d) } >= 1,
+      "the first load infers the schema with a job")
+    var second: org.apache.spark.sql.DataFrame = null
+    assert(jobsLaunched { second = Tables.orders(spark, d) } === 0)
+    assert(relation(second) eq relation(first), "the second load reuses the resolved relation")
     assert(Tables.orders(spark, d).count() === 50L)
+  }
+
+  private def relation(df: org.apache.spark.sql.DataFrame) =
+    df.queryExecution.analyzed.collectFirst {
+      case r: org.apache.spark.sql.execution.datasources.LogicalRelation => r.relation
+    }.get
+
+  private def entries(path: String): Int =
+    Tables.cachedPaths.count(_.endsWith(new java.io.File(path).getCanonicalPath))
+
+  test("a file rewritten in place inside a flat directory is resolved again") {
+    val d = tmpDir("graft_tables_inplace")
+    val path = s"$d/t.parquet"
+    (1L to 3L).toDF("k").coalesce(1).write.parquet(path)
+    (1L to 500L).toDF("k").coalesce(1).write.parquet(s"$d/other.parquet")
+    assert(Tables.parquet(spark, path).count() === 3L)
+    val dir = new java.io.File(path)
+    val stamp = dir.lastModified()
+    def part(p: java.io.File) = p.listFiles().filter(_.getName.startsWith("part-")).head
+    val target = part(dir)
+    dir.listFiles().filter(_.getName.endsWith(".crc")).foreach(_.delete())
+    java.nio.file.Files.write(target.toPath,
+      java.nio.file.Files.readAllBytes(part(new java.io.File(s"$d/other.parquet")).toPath))
+    assert(dir.setLastModified(stamp))
+    assert(Tables.parquet(spark, path).count() === 500L)
+    assert(Tables.parquet(spark, path).as[Long].collect().sorted.toSeq === (1L to 500L))
+    assert(Tables.parquet(spark, path).agg(org.apache.spark.sql.functions.max("k"))
+      .head().getLong(0) === 500L)
+  }
+
+  test("a nested directory takes the plain read and is not kept") {
+    val path = s"${tmpDir("graft_tables_nested")}/t.parquet"
+    (1L to 10L).map(i => (i, i % 2)).toDF("k", "p").write.partitionBy("p").parquet(path)
+    val t = Tables.parquet(spark, path)
+    assert(t.columns.toSeq === Seq("k", "p"))
+    assert(t.filter($"p" === 1L).count() === 5L)
+    assert(entries(path) === 0)
+  }
+
+  test("a rewrite replaces the path's entry, and releaseCaches empties the cache") {
+    val path = s"${tmpDir("graft_tables_entry")}/t.parquet"
+    Seq(1L).toDF("k").write.parquet(path)
+    val before = relation(Tables.parquet(spark, path))
+    assert(entries(path) === 1)
+    Seq(2L, 3L).toDF("k").write.mode("overwrite").parquet(path)
+    val after = Tables.parquet(spark, path)
+    assert(relation(after) ne before)
+    assert(after.as[Long].collect().sorted.toSeq === Seq(2L, 3L))
+    assert(entries(path) === 1)
+    SparkEntry.releaseCaches()
+    assert(Tables.cachedPaths.isEmpty)
+  }
+
+  test("only the paths read last are kept") {
+    val d = tmpDir("graft_tables_bound")
+    val paths = (0 to Tables.MaxRelations).map { i =>
+      val path = s"$d/t$i.parquet"
+      Seq(i.toLong).toDF("k").write.parquet(path)
+      Tables.parquet(spark, path)
+      path
+    }
+    assert(Tables.cachedPaths.size <= Tables.MaxRelations)
+    assert(entries(paths.head) === 0 && entries(paths.last) === 1)
+    assert(Tables.parquet(spark, paths.head).as[Long].collect().toSeq === Seq(0L))
   }
 
   test("a path rewritten with a different schema is inferred again") {
@@ -40,6 +107,7 @@ class TablesSpec extends SparkSpec {
     val ids = (df: org.apache.spark.sql.DataFrame) =>
       df.queryExecution.analyzed.output.map(_.exprId).toSet
     assert(ids(a).intersect(ids(b)).isEmpty)
+    assert(relation(a) eq relation(b))
     val joined = a.join(b, a("o_custkey") === b("o_custkey") &&
       a("o_orderkey") < b("o_orderkey"))
     val expected = (1L to 50L).groupBy(_ % 7).values

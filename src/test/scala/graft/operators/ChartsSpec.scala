@@ -77,6 +77,69 @@ class ChartsSpec extends SparkSpec {
     assert(got == Map(1L -> 3L, 2L -> 0L, 3L -> 1L))
   }
 
+  /** weeksOnChart over (entity, week offset from Monday 2024-01-01, value)
+    * rows, one event each at noon on the week's Wednesday, as a map. */
+  private def streaks(rows: Seq[(Option[Long], Int, Double)], k: Int): Map[Option[Long], Long] = {
+    val monday = java.time.Instant.parse("2024-01-03T12:00:00Z")
+    val df = rows.map { case (e, w, v) => (e, monday.plus(7L * w, java.time.temporal.ChronoUnit.DAYS), v) }
+      .toDF("user_id", "ts_t", "value")
+    val got = Charts.weeksOnChart(df, "user_id", "ts_t", "value", k)
+    assert(got.schema.map(f => f.name -> f.dataType.simpleString) ===
+      Seq("user_id" -> "bigint", "weeks_on_chart" -> "bigint"))
+    val out = got.as[(Option[Long], Long)].collect()
+    assert(out.map(_._1).distinct.length === out.length, "one row per entity")
+    out.toMap
+  }
+
+  test("weeksOnChart: a week without the entity breaks its streak") {
+    // k=2. Entity 1 has no event in week 1, so its streak restarts in
+    // week 2; entity 3 charts from week 1 on; entity 2 drops out.
+    val got = streaks(Seq(
+      (Some(1L), 0, 10.0), (Some(2L), 0, 5.0), (Some(3L), 0, 1.0),
+      (Some(2L), 1, 5.0), (Some(3L), 1, 1.0),
+      (Some(1L), 2, 10.0), (Some(2L), 2, 1.0), (Some(3L), 2, 5.0),
+      (Some(1L), 3, 10.0), (Some(2L), 3, 1.0), (Some(3L), 3, 5.0)), k = 2)
+    assert(got === Map(Some(1L) -> 2L, Some(2L) -> 0L, Some(3L) -> 3L))
+  }
+
+  test("weeksOnChart: a rank tie goes to the smaller entity") {
+    val got = streaks(Seq(
+      (Some(5L), 0, 7.0), (Some(4L), 0, 7.0),
+      (Some(5L), 1, 7.0), (Some(4L), 1, 7.0)), k = 1)
+    assert(got === Map(Some(4L) -> 2L, Some(5L) -> 0L))
+  }
+
+  test("weeksOnChart: an entity never charted gets 0, and so does a week gap for everyone") {
+    // Nobody has events in week 2, so no streak reaches back past it.
+    val got = streaks(Seq(
+      (Some(1L), 0, 9.0), (Some(9L), 0, 0.5),
+      (Some(1L), 1, 9.0), (Some(9L), 1, 0.5),
+      (Some(1L), 3, 9.0), (Some(9L), 3, 0.5)), k = 1)
+    assert(got === Map(Some(1L) -> 1L, Some(9L) -> 0L))
+  }
+
+  test("weeksOnChart: a NULL entity is reported once, with 0") {
+    val got = streaks(Seq(
+      (None, 0, 100.0), (Some(1L), 0, 10.0),
+      (None, 1, 100.0), (Some(1L), 1, 10.0)), k = 2)
+    assert(got === Map(None -> 0L, Some(1L) -> 2L))
+  }
+
+  test("weeksOnChart agrees with a week-by-week replay of the reference counter") {
+    val rnd = new scala.util.Random(7)
+    val rows = Seq.fill(400)((Some(rnd.nextInt(12).toLong), rnd.nextInt(9),
+      rnd.nextInt(20).toDouble))
+    val k = 3
+    val scores = rows.groupBy(r => (r._1.get, r._2)).map { case (key, rs) => key -> rs.map(_._3).sum }
+    val charted = scores.groupBy(_._1._2).map { case (w, es) =>
+      w -> es.toSeq.sortBy { case ((e, _), v) => (-v, e) }.take(k).map(_._1._1).toSet }
+    val maxWk = rows.map(_._2).max
+    val expected = rows.map(_._1.get).distinct.map { e =>
+      Some(e) -> (maxWk to 0 by -1).takeWhile(w => charted.get(w).exists(_(e))).size.toLong
+    }.toMap
+    assert(streaks(rows, k) === expected)
+  }
+
   test("weeklyChart ranks within each week") {
     val df = Seq(
       (1L, java.sql.Timestamp.valueOf("2024-01-02 00:00:00"), 10.0),

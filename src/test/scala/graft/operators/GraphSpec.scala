@@ -278,4 +278,18 @@ class GraphSpec extends SparkSpec {
       .as[(Long, Long)].collect().toMap
     assert(gd === Map(2L -> 1000000L, 3L -> 1000000L, 4L -> 1000000L))
   }
+
+  test("pin fills its table in one job, with no count aggregate") {
+    val df = spark.range(0, 200, 1, 2).toDF("k").filter($"k" % 3 =!= 0)
+    df.queryExecution.sparkPlan // a plan built before the pin, as spreadBy builds one
+    val before = spark.sparkContext.getRDDStorageInfo.map(_.id).toSet
+    var p: org.apache.spark.sql.DataFrame = null
+    try {
+      assert(jobsLaunched { p = Graph.pin(df) } === 1)
+      val filled = spark.sparkContext.getRDDStorageInfo.filterNot(i => before(i.id))
+      assert(filled.nonEmpty && filled.forall(i => i.numCachedPartitions == i.numPartitions),
+        filled.toSeq.toString)
+      assert(p.count() === 133L)
+    } finally if (p != null) p.unpersist(blocking = true)
+  }
 }

@@ -69,4 +69,13 @@ class BloomIndexSpec extends SparkSpec {
     assert(jobsLaunched { probe = BloomIndex.candidateQuery(spark, side, "7") } === 0)
     assert(probe.collect().length >= 1)
   }
+
+  test("the probe hash is the build column's xxhash64, computed without a query") {
+    for (v <- Seq("", "7", "Grüße, 東京 \uD83C\uDFB5")) {
+      val built = Seq(v).toDF("v").select(xxhash64($"v".cast("string"))).head().getLong(0)
+      var probe = 0L
+      assert(jobsLaunched { probe = BloomIndex.probeHash(v) } === 0)
+      assert(probe === built, v)
+    }
+  }
 }
