@@ -47,13 +47,13 @@ object GraftSession {
     // already stop that, 150 leaves a segment's worth of margin. Static:
     // read once, when the first plan is compiled in the JVM.
     "spark.sql.codegen.cache.maxEntries" -> "150",
-    // Streaming state lives OFF-HEAP in RocksDB: the stateful operators
-    // here key state by entity/user (EventCharts.streaks,
-    // mapGroupsWithState), whose cardinality at 100 TB is unbounded — the
-    // default in-heap HDFSBackedStateStore OOMs an executor long before
-    // the data does. Changelog checkpointing uploads per-batch deltas
-    // instead of full SST snapshots, keeping commit latency flat as state
-    // grows.
+    // Streaming state lives OFF-HEAP in RocksDB: EventCharts.streaks keys
+    // its `transformWithState` state by entity (also in batch, q36), whose
+    // cardinality at 100 TB is unbounded — the default in-heap
+    // HDFSBackedStateStore OOMs an executor long before the data does, and
+    // transformWithState needs RocksDB's multiple column families.
+    // Changelog checkpointing uploads per-batch deltas instead of full SST
+    // snapshots, keeping commit latency flat as state grows.
     "spark.sql.streaming.stateStore.providerClass" ->
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
     "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" -> "true")

@@ -99,12 +99,12 @@ private[graft] trait QueryRegistry1 { this: SparkEntry.type =>
     "q19_dedup_exact" -> ((s, d) =>
       Dedup.exact(Tables.documents(s, d), "doc_id", "text")),
 
-    // Incremental dedup against a BUCKETED fp store — the IncrementalIngest
-    // layout as an oracle-checked batch query: the "already ingested" third
-    // of the corpus (doc_id % 3 == 0) persists its distinct fingerprints
-    // bucketed on fp; the remaining docs arrive as a batch, dedup within
-    // themselves, and anti-join the store. The store side reads its
-    // buckets with NO shuffle (bucket count == shuffle partitions, so the
+    // Incremental dedup against a BUCKETED fp store, as an oracle-checked
+    // batch query: the "already ingested" third of the corpus
+    // (doc_id % 3 == 0) persists its distinct fingerprints bucketed on fp;
+    // the remaining docs arrive as a batch, dedup within themselves, and
+    // anti-join the store. The store side reads its buckets with NO
+    // shuffle (bucket count == shuffle partitions, so the
     // batch side's window exchange serves the join too — PlanAuditSpec
     // asserts the single-Exchange shape); the RESULT is pure relational
     // algebra, so DuckDB replays it exactly.

@@ -387,8 +387,7 @@ private[graft] trait QueryRegistry2 { this: SparkEntry.type =>
 
     // Incremental SEMANTIC near-dup: the batch (vectors with id % 3 != 0)
     // probes the ingested third's PERSISTED bucketed sign-cell store —
-    // q147's split-candidate shape over q141's cosine semantics, the
-    // batch view of graft.streaming.SemanticIngest's per-trigger probe.
+    // q147's split-candidate shape over q141's cosine semantics.
     "q154_incremental_semantic" -> ((s, d) =>
       Dedup.incrementalSemantic(
         Tables.embeddings(s, d).filter(pmod(col("vec_id"), lit(3)) =!= 0),

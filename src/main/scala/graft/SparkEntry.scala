@@ -117,10 +117,9 @@ object SparkEntry
   /** Bucketed fp store backing q81, built once per (session, scale dir):
     * distinct fingerprints of the corpus third with doc_id % 3 == 0,
     * written `bucketBy(shuffle-partitions, fp)` so the incremental
-    * anti-join's store side scans its buckets without an Exchange — the
-    * exact layout [[graft.streaming.IncrementalIngest]] maintains
-    * continuously, here as a deterministic batch artifact the DuckDB
-    * oracle can replay. Returns the catalog table name. */
+    * anti-join's store side scans its buckets without an Exchange, as a
+    * deterministic batch artifact the DuckDB oracle can replay. Returns
+    * the catalog table name. */
   private[graft] val fpStoreCache =
     scala.collection.concurrent.TrieMap.empty[(SparkSession, String), String]
   private[graft] def fpStoreTable(s: SparkSession, d: String): String =
@@ -167,9 +166,8 @@ object SparkEntry
 
   /** Bucketed sign-cell store backing q154 — the q147 layout for the
     * SEMANTIC family: the ingested third's (bk, id, v, nrm) cell table
-    * bucketed on bk (the probe join's key), built by the same
-    * [[Dedup.semanticStoreTable]] stage [[graft.streaming.SemanticIngest]]
-    * maintains continuously. Returns the catalog table name. */
+    * bucketed on bk (the probe join's key), built by the
+    * [[Dedup.semanticStoreTable]] stage. Returns the catalog table name. */
   private[graft] val semStoreCache =
     scala.collection.concurrent.TrieMap.empty[(SparkSession, String), String]
   private[graft] def semanticStoreTable(s: SparkSession, d: String): String =
@@ -596,7 +594,10 @@ object SparkEntry
   /** The q299 oracle: the same exact-cross-multiply tournament, then
     * `iters` UNROLLED MM steps over the ≤|items|²-row wins matrix —
     * per step one d-fold, the raw update with the d=0 carry, and the
-    * max-norm back to 1000 milli. Pure integer floor arithmetic. */
+    * max-norm back to 1000 milli. Pure integer floor arithmetic.
+    * `w` and every `p$k` are MATERIALIZED: each step reads its `p` three
+    * times, and DuckDB otherwise re-expands the whole CTE chain per
+    * reference (minutes instead of milliseconds at sf0.001). */
   private[graft] def q299OracleSql: String = {
     val iters = 3
     val steps = (1 to iters).map { k =>
@@ -611,7 +612,7 @@ object SparkEntry
                        ELSE wt.wtot * 1000000 // d END AS v
                  FROM d$k JOIN p${k - 1} p ON d$k.i = p.i
                       JOIN wt ON d$k.i = wt.i),
-         p$k AS (SELECT i, v * 1000
+         p$k AS MATERIALIZED (SELECT i, v * 1000
                   // greatest(1, (SELECT max(v) FROM r$k)) AS p
                  FROM r$k)"""
     }.mkString(",\n         ")
@@ -623,7 +624,8 @@ object SparkEntry
            WHERE user_id IS NOT NULL AND event_type IS NOT NULL
              AND value IS NOT NULL
            GROUP BY 1, 2),
-         w AS (SELECT a.i AS wi, b.i AS li, CAST(count(*) AS BIGINT) AS n
+         w AS MATERIALIZED (SELECT a.i AS wi, b.i AS li,
+                CAST(count(*) AS BIGINT) AS n
                FROM cells a JOIN cells b ON a.e = b.e AND a.i <> b.i
                WHERE a.s * b.n > b.s * a.n GROUP BY 1, 2),
          it AS (SELECT DISTINCT i FROM

@@ -131,10 +131,6 @@ object TextFunctions {
             concat_ws(" ", slice(toks, i + 1, lit(n)))).otherwise(null)),
         x => x.isNotNull))
 
-  /** Convenience composition — only for one-shot use on small inputs; hot
-    * paths should project [[tokens]] first (see scaladoc there). */
-  def wordShingles(c: Column, n: Int): Column = shinglesOf(tokens(c), n)
-
   /** Native single-pass shingles (see [[WordShingles]]) — the hot-path
     * variant used by the dedup operators; identical output to
     * `shinglesOf(tokens(c), n)`. */

@@ -1400,18 +1400,6 @@ object Binary {
     Some((w, h, px))
   }
 
-  /** One pixel (R, G, B) of a decodable PNG — (x, y) with y = 0 the TOP
-    * row (PNG file order). Decodes the image; callers extracting many
-    * pixels should [[pngDecode]] once. */
-  def pngPixel(bytes: Array[Byte], x: Int, y: Int): Option[(Int, Int, Int)] =
-    pngDecode(bytes).flatMap { case (w, h, px) =>
-      if (x < 0 || x >= w || y < 0 || y >= h) None
-      else {
-        val p = (y * w + x) * 3
-        Some(((px(p) & 0xff), (px(p + 1) & 0xff), (px(p + 2) & 0xff)))
-      }
-    }
-
   /** Encode top-down RGB pixels as a PNG (filter 0 rows — the decoder
     * proves the interesting direction; the encoder just needs to be a
     * valid container for the resized payload). */

@@ -271,16 +271,6 @@ object Dedup {
       .select(col("id1"), col("id2"), col("jaccard"))
   }
 
-  /** Shingle-containment near-dup pairs: containment = |A∩B| / min(|A|,|B|)
-    * — the asymmetric complement of Jaccard that catches a short document
-    * quoted inside a long one (Jaccard dilutes to ~|A|/|B| there and never
-    * crosses a sane threshold). Derived from [[pairShingleStats]]; the
-    * threshold compares the raw IEEE ratio, so the oracle matches
-    * bit-for-bit. */
-  def containmentPairs(docs: DataFrame, idCol: String, textCol: String,
-                       n: Int, minContainment: Double): DataFrame =
-    containmentFromStats(pairShingleStats(docs, idCol, textCol, n), minContainment)
-
   /** MinHash signatures via the native map-side sketch ([[MinHashSig]]):
     * sig[i] = min over crc32-based permutation i of the doc's shingles.
     * No explode, no groupBy — one narrow projection. */
@@ -483,18 +473,6 @@ object Dedup {
     out
   }
 
-  /** Full-row variant of [[exact]]: keep every input column plus the
-    * computed `fp` — the shape a continuous ingest appends to its store,
-    * where downstream analytics need the payload columns, not just the
-    * fingerprint. Same one-shuffle window dedup, smallest id kept. */
-  def exactRows(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
-    val w = Window.partitionBy("fp").orderBy(col(idCol).asc)
-    docs.withColumn("fp", T.fingerprint(col(textCol)))
-      .withColumn("graft_rn", row_number().over(w))
-      .filter(col("graft_rn") === 1)
-      .drop("graft_rn")
-  }
-
   /** Incremental exact dedup: drop batch docs whose fingerprint already
     * exists in the corpus fingerprint store, and dedup within the batch.
     * This is the continuous-ingest pattern — the corpus side is only its
@@ -509,9 +487,7 @@ object Dedup {
 
   /** Distributed bloom build over a store's `fp` column: one aggregation
     * pass, one compact driver-side artifact. Hash family: xxhash64 longs
-    * (putLong on build, the same hash on probe). A long-lived ingest
-    * builds this ONCE per (re)start and keeps it current by merging each
-    * batch's survivor fps ([[incrementalRowsBloom]] callers own that). */
+    * (putLong on build, the same hash on probe). */
   def fpBloom(knownFps: DataFrame, expectedItems: Long,
               fpp: Double = 0.01): org.apache.spark.util.sketch.BloomFilter = {
     val hashed = knownFps.select(xxhash64(col("fp")).as("graft_h"))
@@ -571,17 +547,6 @@ object Dedup {
                             fpp: Double = 0.01): DataFrame =
     bloomPrefiltered(exact(batch, idCol, textCol), knownFps,
       fpBloom(knownFps, expectedItems, fpp))
-
-  /** Full-row bloom-prefiltered incremental dedup against a PREBUILT
-    * filter — the per-micro-batch workhorse of a continuous ingest: the
-    * caller builds the filter once per (re)start ([[fpBloom]]) and merges
-    * each batch's survivors in, so per-batch cost tracks the batch while
-    * the store-wide scan happens once per process lifetime, not once per
-    * batch. Survivors keep every input column plus `fp`. */
-  def incrementalRowsBloom(batch: DataFrame, idCol: String, textCol: String,
-                           knownFps: DataFrame,
-                           bloom: org.apache.spark.util.sketch.BloomFilter): DataFrame =
-    bloomPrefiltered(exactRows(batch, idCol, textCol), knownFps, bloom)
 
   /** Blocked fuzzy matching — entity resolution over a name/title column:
     * candidate pairs share a blocking key (the first token), survivors are
@@ -1087,44 +1052,6 @@ object Dedup {
         .join(store, Seq("g"), "left_semi")
         .select("id", "p").distinct(),
       k)
-
-  /** Per-document duplicated-span rollup of a NEW batch against a
-    * persisted corpus [[gramStore]] — [[dupSpanReport]]'s ingest-time
-    * twin over [[dupSpansVsStore]]'s semi-join, with an optional
-    * prebuilt bloom over the store's gram hashes: grams the filter
-    * rejects are DEFINITELY absent from the store and skip the
-    * semi-join entirely, so the join's probe side tracks the batch's
-    * boilerplate rate, not its gram count (the
-    * [[incrementalRowsBloom]] discipline at gram granularity — fpp
-    * false positives only route a few extra grams through the exact
-    * semi-join, never change the result). Returns (doc_id, n_tokens,
-    * dup_tokens, dup_ppm) for EVERY batch doc — zero-span docs report
-    * zeros. */
-  def dupSpanReportVsStore(batch: DataFrame, idCol: String, textCol: String,
-                           k: Int, store: DataFrame,
-                           bloom: Option[org.apache.spark.util.sketch.BloomFilter] = None): DataFrame = {
-    val grams = spanGrams(batch, idCol, textCol, k)
-    val probed = bloom match {
-      case Some(b) =>
-        val bos = new java.io.ByteArrayOutputStream()
-        b.writeTo(bos)
-        import org.apache.spark.sql.graftbridge.ColumnBridge
-        grams.filter(ColumnBridge.bloomMightContain(bos.toByteArray, col("g")))
-      case None => grams
-    }
-    val spans = islandSpans(
-      probed.join(store, Seq("g"), "left_semi").select("id", "p").distinct(), k)
-      .groupBy("doc_id").agg(sum("span_len").as("dup_tokens"))
-    batch
-      .select(col(idCol).as("doc_id"),
-        T.wsTokens(col(textCol)).cast("long").as("n_tokens"))
-      .join(spans, Seq("doc_id"), "left")
-      .select(col("doc_id"), col("n_tokens"),
-        coalesce(col("dup_tokens"), lit(0L)).cast("long").as("dup_tokens"),
-        expr("CASE WHEN n_tokens = 0 THEN 0 ELSE" +
-          " coalesce(dup_tokens, 0) * 1000000 div n_tokens END")
-          .as("dup_ppm"))
-  }
 
   /** Span-dedup sensitivity sweep — q216's threshold-sweep discipline
     * applied to the substring family: corpus-level span statistics at

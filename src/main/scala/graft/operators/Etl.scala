@@ -506,12 +506,11 @@ object Etl {
                            key: String): DataFrame =
     incrementalJoinDelta(aOld, aDelta, bOld, bDelta, Seq(key))
 
-  /** Multi-key variant (also what [[graft.streaming.JoinView]] rides,
-    * joining on (bucket, key) so the bucket-partitioned store side can
-    * co-locate). Three-leg form — ΔA⋈B_old ∪ A_old⋈ΔB ∪ ΔA⋈ΔB — keeps
-    * each STORE a pure join side (no union over it), which is what lets
-    * a KeyGroupedPartitioning store scan stay Exchange-free while only
-    * the batch-sized delta shuffles into its layout. */
+  /** Multi-key variant (join on (bucket, key) so a bucket-partitioned
+    * store side can co-locate). Three-leg form — ΔA⋈B_old ∪ A_old⋈ΔB ∪
+    * ΔA⋈ΔB — keeps each STORE a pure join side (no union over it), which
+    * is what lets a KeyGroupedPartitioning store scan stay Exchange-free
+    * while only the batch-sized delta shuffles into its layout. */
   def incrementalJoinDelta(aOld: DataFrame, aDelta: DataFrame,
                            bOld: DataFrame, bDelta: DataFrame,
                            keys: Seq[String]): DataFrame =

@@ -349,9 +349,7 @@ object Sessions {
   /** Last-touch conversion attribution: each `convType` event attributes
     * to the user's most recent `touchType` event STRICTLY BEFORE it
     * (total order = (ts, event id), so same-timestamp ties never flip
-    * across engines or re-sharding) and within `windowUs`. The batch
-    * twin of the stream-stream attribution join (streaming/Joins.scala)
-    * — same semantics, replayable against the oracle.
+    * across engines or re-sharding) and within `windowUs`.
     *
     * One user-keyed window pass carries the running last-touch timestamp
     * (`max` of the touch-typed ts over preceding rows) — no self-join,

@@ -1081,18 +1081,13 @@ object WarehouseSink {
     * fast-forward later is pointer-only. */
   def appendToBranch(spark: org.apache.spark.sql.SparkSession, dir: String,
                      name: String,
-                     rows: org.apache.spark.sql.DataFrame,
-                     epoch: Option[Long] = None): Unit = {
+                     rows: org.apache.spark.sql.DataFrame): Unit = {
     val r = readRef(dir, name).getOrElse(throw new IllegalArgumentException(
       s"no ref '$name' on $dir"))
     require(r.kind == "branch", s"ref '$name' is a tag — tags are immutable")
     val head = readManifestAt(dir, r.version).getOrElse(
       throw new IllegalStateException(
         s"branch '$name' head v${r.version} was vacuumed"))
-    // Exactly-once leg for streaming folds: a replayed micro-batch
-    // (epoch ≤ the branch head's cursor) is a detected no-op — the same
-    // epoch-guard contract as the main table's streaming write.
-    if (epoch.exists(_ <= head.epoch)) return
     val schema = StructType.fromDDL(head.schemaDdl)
     require(rows.columns.toSet == schema.fieldNames.toSet,
       s"branch append schema ${rows.columns.mkString(",")} must match " +
@@ -1110,7 +1105,7 @@ object WarehouseSink {
     while (!claimed) {
       try {
         writeManifestFileOnly(dir, Manifest(v, head.schemaDdl,
-          head.files ++ newFiles, epoch.getOrElse(head.epoch),
+          head.files ++ newFiles, head.epoch,
           head.partitionCol,
           sortedBy = "", op = "branch-append", cdf = head.cdf,
           dvs = head.dvs, ts = System.currentTimeMillis(),

@@ -76,7 +76,7 @@ class WarehouseCdfSpec extends SparkSpec {
       .write.format(Fmt).option("path", dir).mode("append").save() // v2
     WarehouseSink.maintain(spark, dir, targetBytes = Long.MaxValue,
       keepVersions = 10) // v3
-    assert(WarehouseTestAccess.manifestCursor(dir)._2 === 3L)
+    assert(WarehouseSink.readManifest(dir).get.version === 3L)
     assert(changes(dir, 2, 3).isEmpty)
   }
 
@@ -234,7 +234,7 @@ class WarehouseCdfSpec extends SparkSpec {
       .select("id").as[Long].collect().sorted.toSeq
     assert(ids() === Seq(1L, 2L, 3L, 4L, 9L))
     // rolled-back states stay time-travelable; history moved FORWARD
-    assert(WarehouseTestAccess.manifestCursor(dir)._2 === 3L)
+    assert(WarehouseSink.readManifest(dir).get.version === 3L)
     assert(spark.read.format(Fmt).option("path", dir)
       .option("versionAsOf", "2").load().count() === 2L)
     // the feed sees the restore as delete(v2 state) + insert(v1 state)

@@ -248,6 +248,22 @@ class WarehouseSinkSpec extends SparkSpec {
     assert(WarehouseSink.readManifest(dir).get.epoch === -1L)
   }
 
+  test("a batch write with streamEpoch publishes each epoch once") {
+    val dir = tmp()
+    def w(id: Long, epoch: Long, mode: String) =
+      Seq(id).toDF("id").write.format(Fmt).option("path", dir)
+        .option("streamEpoch", epoch.toString).mode(mode).save()
+    def ids() = spark.read.format(Fmt).option("path", dir).load()
+      .select("id").as[Long].collect().sorted.toSeq
+    w(1L, 0L, "append"); w(2L, 1L, "append")
+    val m = WarehouseSink.readManifest(dir).get
+    assert(m.epoch === 1L)
+    // a replayed epoch is a detected no-op, for append and overwrite alike
+    w(3L, 1L, "append"); w(4L, 0L, "overwrite")
+    assert(ids() === Seq(1L, 2L))
+    assert(WarehouseSink.readManifest(dir).get.version === m.version)
+  }
+
   test("streaming epoch into a partitioned table keeps the partition claim") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
@@ -929,6 +945,29 @@ class WarehouseSinkSpec extends SparkSpec {
         s"storage-partitioned join must not shuffle:\n$plan")
       // and the answer is the real join
       assert(joined.count() === 90L / 5L * (40L / 5L) * 5L)
+    }
+  }
+
+  test("one-side storage-partitioned join shuffles only the delta side") {
+    val store = tmp()
+    (0L until 64L).map(i => (i, s"v$i")).toDF("k", "aval")
+      .withColumn("graft_bucket", pmod(xxhash64(col("k")), lit(4)))
+      .write.format(Fmt).option("path", store)
+      .option("partitionBy", "graft_bucket").mode("overwrite").save()
+    withSQLConf(
+      "spark.sql.sources.v2.bucketing.enabled" -> "true",
+      "spark.sql.sources.v2.bucketing.shuffle.enabled" -> "true",
+      "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
+      val storeSide = spark.read.format(Fmt).option("path", store).load()
+      val delta = (0L until 8L).map(i => (i, i * 100L)).toDF("k", "bval")
+        .withColumn("graft_bucket", pmod(xxhash64(col("k")), lit(4)))
+      val joined = delta.join(storeSide, Seq("graft_bucket", "k"))
+      val plan = joined.queryExecution.executedPlan.toString
+      // exactly ONE Exchange: the delta re-clustering into the store's
+      // KeyGroupedPartitioning; the store scan itself is Exchange-free
+      assert("Exchange".r.findAllIn(plan).size === 1,
+        s"want one (delta-side) Exchange:\n$plan")
+      assert(joined.count() === 8L)
     }
   }
 
